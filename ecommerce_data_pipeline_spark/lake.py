@@ -11,18 +11,30 @@ this module provides the same *semantics* over plain parquet:
   failed job never leaves a half-written table — the property Delta gets from
   its transaction log.
 
-Scale design (100 TB): a full-table rewrite per merge is wrong at scale. Two
-mitigations are built in:
+Scale design (100 TB): a full-table rewrite per merge is wrong at scale.
+The merge is built around three mitigations:
 
-1. **Partitioned tables rewrite only touched partitions.** When the table is
-   partitioned (e.g. silver by ``event_date``, per the reference's own
-   recommendation README.md:295) the merge computes the distinct partition
-   values present in the update set, anti-joins only those partitions, and
-   uses dynamic partition overwrite. A 2-hour late-data merge then touches a
-   handful of date partitions out of thousands — the same I/O profile as a
-   Delta MERGE with partition pruning.
-2. **Delta passthrough.** If delta-spark is importable the same API delegates
-   to a real ``DeltaTable.merge`` (file-level rewrite + transaction log).
+1. **The update set is pinned once inside ``merge``.** A lazy
+   ``localCheckpoint`` on the incremental path makes every pass over the
+   updates (change capture, key probe, rewrite or append) read the batch
+   from the block manager, so callers hand in their lineage unpinned and
+   it is evaluated once per merge.
+2. **One key probe serves both the append decision and relocation.** On a
+   partitioned table (e.g. silver by ``event_date``, per the reference's
+   own recommendation README.md:295) a single ``collect`` of the target's
+   (keys + partition columns) semi-joined against the update keys, unioned
+   with the update set's own partitions, yields every partition the merge
+   touches. An empty hit set is the insert-only case: the batch is
+   appended and no existing file is rewritten.
+3. **The rewrite is staged in the block manager.** Only touched
+   partitions are rewritten: their rows are merged, rebalanced by the
+   partition columns, pinned with an eager ``localCheckpoint`` and written
+   once by dynamic partition overwrite. A
+   2-hour late-data merge then touches a handful of date partitions out of
+   thousands — the I/O profile of a Delta MERGE with partition pruning.
+
+If delta-spark is importable the same API can delegate to a real
+``DeltaTable.merge`` (file-level rewrite + transaction log).
 
 Update sets must be unique per key (the same precondition Delta MERGE
 enforces); ``latest_wins`` pre-dedupes by an ordering column when the caller
@@ -34,6 +46,7 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,6 +63,10 @@ except ImportError:
 # (ExternalCatalogUtils.charToEscape) — needed to address stale partition
 # dirs on disk; f"{col}={value}" alone misses nulls and escaped values.
 _HIVE_ESCAPE_CHARS = set('"#%\'*/:=?\\{[]^') | {chr(c) for c in range(0x20)} | {"\x7f"}
+
+# Largest composite-partition touch set pruned with a flat OR-of-AND
+# predicate; past it a rewrite covers the whole table (with a warning).
+_MAX_COMPOSITE_PARTITIONS = 64
 
 
 def _hive_partition_value(v) -> str:
@@ -328,14 +345,27 @@ class ParquetTable:
         """Upsert ``updates`` by ``keys`` (operators S6/S7/S9).
 
         Bootstrap if the table does not exist yet (the reference's
-        first-run-overwrite path, silver_orders.py:81-85). For partitioned
-        tables only the partitions present in ``updates`` are rewritten.
+        first-run-overwrite path, silver_orders.py:81-85). Otherwise the
+        update set is pinned once here (lazy localCheckpoint), so its
+        lineage is evaluated once however many passes the merge makes;
+        callers need not pin it.
 
-        ``probe_insert_only=False`` skips the insert-only fast-path probe
-        (one extra job per merge): callers whose update set overlaps the
-        target BY CONSTRUCTION — an incremental gold merge always
-        re-merges the max bucket, since its lookback starts 2h BEFORE it —
-        pay the probe on every call and can never win it.
+        On a partitioned table one key probe — the target's (keys +
+        partition columns) semi-joined against the update keys, unioned
+        with the update set's own partitions, in one ``collect`` — decides
+        everything: no hit means INSERT ALL (the batch is appended, no
+        existing file is rewritten); otherwise the touched partitions are
+        the updates' own plus every partition where an update key already
+        lives (a redelivered event with a corrected event_date — its stale
+        row must not survive and duplicate the key). Only those partitions
+        are rewritten, staged in the block manager (see ``_rewrite``).
+
+        An unpartitioned table probes for any matched key (a column-pruned
+        semi-join with an early-out limit(1)) and appends when there is
+        none; ``probe_insert_only=False`` skips that probe for callers
+        whose update set overlaps the target BY CONSTRUCTION — an
+        incremental gold merge always re-merges the max bucket, since its
+        lookback starts 2h BEFORE it — and goes straight to the rewrite.
 
         With ``capture_changes`` (Delta Change Data Feed parity), returns
         the change set of this merge — the update rows tagged
@@ -370,6 +400,7 @@ class ParquetTable:
                         "schema evolution cannot null-fill a partition key"
                     )
                 target, updates = sync_all_columns(target, updates)
+        updates = updates.localCheckpoint(eager=False)
         changes: DataFrame | None = None
         if capture_changes:
             if target is None:
@@ -385,44 +416,6 @@ class ParquetTable:
                 )
                 .localCheckpoint(eager=True)
             )
-        if not self.use_delta and probe_insert_only:
-            # Insert-only fast path: if NO update key exists in the target,
-            # MERGE degenerates to INSERT ALL — append files instead of
-            # rewriting. This is the hot case for append-mostly streams
-            # (every Kafka (topic,partition,offset) key is new), and the
-            # 100 TB case where rewriting a growing table per micro-batch
-            # is the difference between O(batch) and O(table) I/O per
-            # trigger. The probe is a column-pruned key semi-join with an
-            # early-out limit(1). Replays (matched keys) and mixed batches
-            # take the rewrite path below, keeping idempotency semantics.
-            if changes is not None:
-                # capture_changes already joined updates against the
-                # target keys and pinned the result — a key exists in the
-                # target iff the change set tagged it 'update_postimage'.
-                # Reading the checkpointed batch-sized frame replaces a
-                # second full target-key semi-join (r17, guide §1.2
-                # "don't compute things twice"; measured: the duplicate
-                # probe was ~0.6 s of incremental_view_refresh's 2.2 s
-                # delta-merge phase).
-                any_match = (
-                    changes.filter(F.col("_change_type") == "update_postimage")
-                    .limit(1)
-                    .count()
-                )
-            else:
-                any_match = (
-                    updates.select(*keys)
-                    .join(target.select(*keys), keys, "left_semi")
-                    .limit(1)
-                    .count()
-                )
-            if any_match == 0:
-                self._archive()
-                writer = updates.write.mode("append")
-                if self.partition_by:
-                    writer = writer.partitionBy(*self.partition_by)
-                writer.parquet(self.path)
-                return changes
         if self.use_delta:
             # Real MERGE with file-level rewrite + transaction log
             # (reference behavior: silver_orders.py:72-79). Delta prunes
@@ -438,96 +431,138 @@ class ParquetTable:
                 .execute()
             )
             return changes
-        if target is None:
-            target = self.read(spark)
-        part_cols = [c for c in self.partition_by if c in updates.columns]
-        if part_cols:
-            # Partition-pruned merge: rewrite only partitions the updates
-            # touch, PLUS any partition where an update key already lives
-            # under a different partition value (e.g. a redelivered event
-            # with a corrected event_date) — otherwise the stale row in the
-            # untouched partition would survive and duplicate the key,
-            # diverging from Delta MERGE semantics. The relocation probe is
-            # a column-pruned scan of (keys + partition cols) semi-joined
-            # against the update keys — key-column bytes only, not the table.
-            upd_keys = updates.select(*keys).distinct()
-            relocated = (
-                target.select(*keys, *part_cols)
-                .join(upd_keys, on=keys, how="left_semi")
-                .select(*part_cols)
+        touched: set[tuple] | None = None
+        if self.partition_by:
+            parts = self.partition_by
+            found = (
+                target.select(*keys, *parts)
+                .join(updates.select(*keys).distinct(), keys, "left_semi")
+                .select(*parts, F.lit(True).alias("__hit"))
+                .unionByName(updates.select(*parts, F.lit(False).alias("__hit")))
                 .distinct()
+                .collect()
             )
-            touched = {
-                tuple(r)
-                for r in updates.select(*part_cols).distinct().collect()
-            }
-            touched |= {tuple(r) for r in relocated.collect()}
-            touched = sorted(touched, key=lambda t: tuple(str(x) for x in t))
-            # Filter with isin (one flat IN-list reaches the scan as a
-            # partition-pruning predicate); an OR-of-AND chain over hundreds
-            # of partitions overflows the Catalyst visitor stack. Composite
-            # partition keys would need tuple-IN support — none of our
-            # tables use one, so that path keeps the flat-predicate shape
-            # only when it is safely small.
-            if not touched:
-                touched_target = target.limit(0)
-            elif len(part_cols) == 1:
-                c = part_cols[0]
-                vals = [t[0] for t in touched if t[0] is not None]
-                pred = F.col(c).isin(vals) if vals else F.lit(False)
-                if any(t[0] is None for t in touched):
-                    pred = pred | F.col(c).isNull()
-                touched_target = target.filter(pred)
-            elif len(touched) <= 64:
-                pred = None
-                for values in touched:
-                    clause = None
-                    for c, v in zip(part_cols, values):
-                        cond = (
-                            F.col(c).isNull() if v is None else (F.col(c) == F.lit(v))
-                        )
-                        clause = cond if clause is None else (clause & cond)
-                    pred = clause if pred is None else (pred | clause)
-                touched_target = target.filter(pred)
-            else:
-                # Too many composite partitions for a flat predicate: give
-                # up pruning, keep correctness (full merge rewrite).
-                self.overwrite(merge_upsert(target, updates, keys))
-                return changes
-            merged = merge_upsert(touched_target, updates, keys)
-            # Materialize before overwriting partitions we are reading from.
-            staging = f"{self.path}__stage_{uuid.uuid4().hex[:8]}"
-            merged.write.mode("overwrite").parquet(staging)
-            try:
-                staged = spark.read.parquet(staging)
-                self._archive()
-                (
-                    staged.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy(*self.partition_by)
-                    .parquet(self.path)
-                )
-                # A partition whose only rows were relocated keys is absent
-                # from the merged output, so dynamic overwrite leaves its old
-                # directory behind — drop it explicitly.
-                written = {
-                    tuple(r)
-                    for r in staged.select(*part_cols).distinct().collect()
-                }
-                for values in set(map(tuple, touched)) - written:
-                    subdir = os.path.join(
-                        self.path,
-                        *[
-                            f"{c}={_hive_partition_value(v)}"
-                            for c, v in zip(part_cols, values)
-                        ],
-                    )
-                    shutil.rmtree(subdir, ignore_errors=True)
-            finally:
-                shutil.rmtree(staging, ignore_errors=True)
+            insert_only = not any(r["__hit"] for r in found)
+            touched = {tuple(r)[:-1] for r in found}
+        elif not probe_insert_only:
+            insert_only = False
+        elif changes is not None:
+            # A key exists in the target iff the pinned change set tagged
+            # it 'update_postimage' — no second target-key semi-join.
+            insert_only = (
+                changes.filter(F.col("_change_type") == "update_postimage")
+                .limit(1)
+                .count()
+                == 0
+            )
         else:
-            self.overwrite(merge_upsert(target, updates, keys))
+            insert_only = (
+                updates.select(*keys)
+                .join(target.select(*keys), keys, "left_semi")
+                .limit(1)
+                .count()
+                == 0
+            )
+        if insert_only:
+            # MERGE degenerates to INSERT ALL: append files instead of
+            # rewriting — the hot case for append-mostly streams (every
+            # Kafka (topic,partition,offset) key is new) and the difference
+            # between O(batch) and O(table) I/O per trigger at scale.
+            self._archive()
+            writer = updates.write.mode("append")
+            if self.partition_by:
+                writer = writer.partitionBy(*self.partition_by)
+            writer.parquet(self.path)
+        else:
+            self._rewrite(
+                target, touched, lambda rows: merge_upsert(rows, updates, keys)
+            )
         return changes
+
+    def _partition_predicate(self, touched: set[tuple]):
+        """Pruning filter selecting exactly the ``touched`` partitions, or
+        None (with a warning) past the composite-partition cap.
+
+        A single partition column gets one flat IN-list, which reaches the
+        scan as a partition-pruning predicate; an OR-of-AND chain over
+        hundreds of partitions would overflow the Catalyst visitor stack,
+        so composite keys keep that shape only while it is small."""
+        cols = self.partition_by
+        if len(cols) == 1:
+            c = cols[0]
+            vals = [t[0] for t in touched if t[0] is not None]
+            pred = F.col(c).isin(vals) if vals else F.lit(False)
+            if any(t[0] is None for t in touched):
+                pred = pred | F.col(c).isNull()
+            return pred
+        if len(touched) > _MAX_COMPOSITE_PARTITIONS:
+            warnings.warn(
+                f"{self.path}: {len(touched)} composite partitions touched, "
+                f"over the pruning cap of {_MAX_COMPOSITE_PARTITIONS}; "
+                "rewriting the whole table",
+                stacklevel=4,
+            )
+            return None
+        pred = F.lit(False)
+        for values in touched:
+            clause = F.lit(True)
+            for c, v in zip(cols, values):
+                clause = clause & (
+                    F.col(c).isNull() if v is None else (F.col(c) == F.lit(v))
+                )
+            pred = pred | clause
+        return pred
+
+    def _rewrite(self, target: DataFrame, touched: set[tuple] | None, rewrite) -> None:
+        """Replace the ``touched`` partitions of ``target`` with
+        ``rewrite`` applied to their rows; ``touched=None`` (unpartitioned)
+        rewrites the whole table.
+
+        The rewritten rows are rebalanced by the partition columns (AQE
+        sizes the output files: one per small partition, split past the
+        advisory size) and pinned in the block manager (eager
+        localCheckpoint) before the table mutates, so the write reads no
+        file it replaces, then written once by dynamic partition
+        overwrite. A touched partition the rewrite leaves empty (all its
+        rows were relocated or deleted keys) is not written, so dynamic
+        overwrite keeps its old directory: its file listing is unchanged
+        after the write, and it is dropped. Unpartitioned tables, and
+        composite touch sets past the pruning cap, take the atomic
+        full-table ``overwrite``."""
+        pred = None if touched is None else self._partition_predicate(touched)
+        if pred is None:
+            self.overwrite(rewrite(target))
+            return
+        rows = (
+            rewrite(target.filter(pred))
+            .hint("rebalance", *self.partition_by)
+            .localCheckpoint(eager=True)
+        )
+
+        def listing(d: str) -> set[str]:
+            return set(os.listdir(d)) if os.path.isdir(d) else set()
+
+        dirs = [
+            os.path.join(
+                self.path,
+                *[
+                    f"{c}={_hive_partition_value(v)}"
+                    for c, v in zip(self.partition_by, values)
+                ],
+            )
+            for values in touched
+        ]
+        before = {d: listing(d) for d in dirs}
+        self._archive()
+        (
+            rows.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(*self.partition_by)
+            .parquet(self.path)
+        )
+        for d, files in before.items():
+            if files and listing(d) == files:  # not rewritten: left empty
+                shutil.rmtree(d, ignore_errors=True)
 
     def delete_keys(
         self,
@@ -545,12 +580,10 @@ class ParquetTable:
         RETRACT buckets) can read it afterwards.
 
         Partitioned tables rewrite ONLY the partitions that contain a
-        doomed key (located with a column-pruned semi-join probe, same
-        shape as the merge relocation probe); a partition left empty has
-        its directory dropped. Past the same composite-partition cap the
-        merge path uses, pruning is abandoned for a full anti-join rewrite
-        rather than building an unbounded OR-of-AND driver-side predicate.
-        Unpartitioned tables anti-join and rewrite atomically.
+        doomed key, through the same ``_rewrite`` as ``merge`` (so a
+        partition left empty has its directory dropped, and past the
+        composite-partition cap the whole table is rewritten, with a
+        warning). Unpartitioned tables anti-join and rewrite atomically.
 
         The removed-row count is computed from the pre-mutation semi-join
         (never by re-reading the table afterwards): a delete that empties
@@ -594,65 +627,21 @@ class ParquetTable:
                 .execute()
             )
             return (removed, changes) if capture_changes else removed
-        part_cols = list(self.partition_by)
-        hit: set[tuple] = set()
-        if part_cols:
+        hit = None
+        if self.partition_by:
             hit = {
-                tuple(r) for r in removed_rows.select(*part_cols).distinct().collect()
+                tuple(r)
+                for r in removed_rows.select(*self.partition_by).distinct().collect()
             }
-        if part_cols and (len(part_cols) == 1 or len(hit) <= 64):
-            if len(part_cols) == 1:
-                c = part_cols[0]
-                vals = [t[0] for t in hit if t[0] is not None]
-                pred = F.col(c).isin(vals) if vals else F.lit(False)
-                if any(t[0] is None for t in hit):
-                    pred = pred | F.col(c).isNull()
-            else:
-                pred = F.lit(False)
-                for values in hit:
-                    clause = F.lit(True)
-                    for c, v in zip(part_cols, values):
-                        clause = clause & (
-                            F.col(c).isNull() if v is None else (F.col(c) == F.lit(v))
-                        )
-                    pred = pred | clause
-            kept = target.filter(pred).join(doomed_keys, keys, "left_anti")
-            staging = f"{self.path}__stage_{uuid.uuid4().hex[:8]}"
-            kept.write.mode("overwrite").parquet(staging)
-            try:
-                staged = spark.read.parquet(staging)
-                self._archive()
-                (
-                    staged.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy(*part_cols)
-                    .parquet(self.path)
-                )
-                written = {
-                    tuple(r)
-                    for r in staged.select(*part_cols).distinct().collect()
-                }
-                for values in hit - written:  # partition emptied: drop dir
-                    subdir = os.path.join(
-                        self.path,
-                        *[
-                            f"{c}={_hive_partition_value(v)}"
-                            for c, v in zip(part_cols, values)
-                        ],
-                    )
-                    shutil.rmtree(subdir, ignore_errors=True)
-            finally:
-                shutil.rmtree(staging, ignore_errors=True)
-        else:
-            # Unpartitioned, or composite-partition hit set too large for a
-            # flat pruning predicate: full anti-join rewrite (atomic swap).
-            self.overwrite(target.join(doomed_keys, keys, "left_anti"))
+        self._rewrite(
+            target, hit, lambda rows: rows.join(doomed_keys, keys, "left_anti")
+        )
         return (removed, changes) if capture_changes else removed
 
     def vacuum(self, retain_versions: int = 0) -> int:
         """Delta ``VACUUM`` parity: drop archived snapshots beyond
-        ``retain_versions`` newest plus any leftover staging/tmp/old dirs
-        from interrupted writes. Returns the number of dirs removed.
+        ``retain_versions`` newest plus any leftover tmp/old dirs from
+        interrupted writes. Returns the number of dirs removed.
         Hard-linked files release disk only once the last snapshot
         referencing them is removed — exactly Delta's data/log retention
         split."""

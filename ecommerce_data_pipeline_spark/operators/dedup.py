@@ -78,22 +78,6 @@ def _spread(df: DataFrame) -> DataFrame:
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
-def _hashed_shingle_arrays(
-    docs: DataFrame, k: int, text_col: str, id_col: str
-) -> DataFrame:
-    """(doc_id, shingles array<long>): distinct shingles as xxhash64 longs.
-    Set operations (intersect/union sizes) on fixed-width longs are ~10x
-    cheaper than on 12-char strings; Jaccard over hashes equals Jaccard
-    over strings absent 64-bit collisions (birthday-bound safe below ~2^32
-    distinct shingles)."""
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.transform(
-            char_shingles(F.col(text_col), k), lambda s: F.xxhash64(s)
-        ).alias("shingles"),
-    )
-
-
 def char_shingles(text: Column, k: int = 12) -> Column:
     """Distinct k-character shingles of lower(text) as an array<string>.
 

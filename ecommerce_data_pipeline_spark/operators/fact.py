@@ -75,17 +75,10 @@ def build_fct_sales_minute(
     fact: ParquetTable,
 ) -> None:
     """Incremental build: slice input to the 2-hour lookback, aggregate,
-    MERGE by minute_bucket (operator S9).
-
-    The update set is pinned with a lazy localCheckpoint before the MERGE:
-    merge() runs the updates lineage twice (the insert-only probe, then
-    the rewrite), and the lineage here is a fact scan + join + agg —
-    materializing the (minute-grain, tiny) aggregate once makes the
-    second pass a block-manager read. Same pattern as the streaming
-    silver batches (streaming/medallion.py)."""
+    MERGE by minute_bucket (operator S9)."""
     bound = incremental_bound(spark, fact)
     sliced = orders_clean.filter(F.col("event_ts") >= F.lit(bound))
-    updates = sales_minute_agg(sliced, enriched).localCheckpoint(eager=False)
+    updates = sales_minute_agg(sliced, enriched)
     # probe_insert_only=False: the lookback starts 2h BEFORE the current
     # max bucket, so the update set always overlaps the target — the
     # insert-only probe can never win here and just costs a job per build.

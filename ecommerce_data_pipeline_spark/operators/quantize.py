@@ -64,14 +64,6 @@ def _dist2_col(v: Column, c: Column) -> Column:
     return F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def _dist2(v: Column, centroid: list[float]) -> Column:
-    # One-call literal construction for the same py4j reason as
-    # _centroid_lit.
-    return _dist2_col(
-        v, F.expr("array(" + ",".join(_dbl_sql(x) for x in centroid) + ")")
-    )
-
-
 def _cell_expr(v: Column, centroids: list[list[float]]) -> Column:
     """0-based argmin-distance cell id; ties resolve to the lowest index
     (array_position returns the first match — deterministic). Arithmetic

@@ -667,6 +667,8 @@ def q_source_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheaper. Values are identical either way — the checkpoint is pure
     materialization (VERDICT r16 ask #6)."""
     import os as _os
+    import warnings
+    from urllib.parse import unquote, urlparse
 
     docs = load_table(spark, sf_dir, "documents")
     q = tx.quality_score(docs).select("doc_id", "quality_score").join(
@@ -675,12 +677,17 @@ def q_source_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_bytes = int(
         _os.environ.get("SPARK_GRAFT_DRIFT_PIN_BYTES", str(4 << 20))
     )
+    # inputFiles() returns URIs: percent-escaped, so a path with a space
+    # only stats after unquoting.
     try:
         scan_bytes = sum(
-            _os.path.getsize(f[len("file:"):] if f.startswith("file:") else f)
-            for f in docs.inputFiles()
+            _os.path.getsize(unquote(urlparse(f).path)) for f in docs.inputFiles()
         )
-    except OSError:
+    except OSError as e:
+        warnings.warn(
+            f"source_quality_drift: cannot size the documents scan ({e}); "
+            "the drift-pin gate stays off"
+        )
         scan_bytes = 0
     if scan_bytes >= pin_bytes:
         q = q.localCheckpoint(eager=False)

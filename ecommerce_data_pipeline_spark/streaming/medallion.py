@@ -172,21 +172,13 @@ def run_streaming_pipeline(
             phases[key] = round(val, 3)
 
     def _silver_orders_batch(batch: DataFrame, batch_id: int) -> None:
-        # Lazy localCheckpoint: merge() runs the updates lineage twice (the
-        # insert-only probe, then the write) — materializing the deduped
-        # parse once makes the second pass a block-manager scan. Batch-sized
-        # (not table-sized) memory, spillable.
-        clean = parse_orders(kafka_identity_dedup(batch)).localCheckpoint(
-            eager=False
-        )
+        clean = parse_orders(kafka_identity_dedup(batch))
         lake.silver_orders.merge(
             batch.sparkSession, clean, keys=["topic", "partition", "offset"]
         )
 
     def _silver_payments_batch(batch: DataFrame, batch_id: int) -> None:
-        clean = parse_payments(kafka_identity_dedup(batch)).localCheckpoint(
-            eager=False
-        )
+        clean = parse_payments(kafka_identity_dedup(batch))
         lake.silver_payments.merge(
             batch.sparkSession, clean, keys=["topic", "partition", "offset"]
         )

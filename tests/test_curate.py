@@ -190,3 +190,30 @@ def test_int8_quantize_keep_carries_columns(spark):
     assert row["tag"] == "x"
     # scale = 2/127; q = floor(v/scale + .5) -> [64, -127]
     assert row["qvec"] == [64, -127]
+
+
+def test_drift_pin_gate_sizes_uri_escaped_paths(spark, tmp_path, monkeypatch):
+    """source_quality_drift sizes its scan from inputFiles() URIs: a sf dir
+    whose name holds a space (percent-escaped in the URI) must still be
+    sized, so above the gate the pin engages — the scored frame's scans
+    move out of the plan into the checkpoint — and no warning is raised."""
+    import shutil
+    import warnings
+
+    from ecommerce_data_pipeline_spark.queries import QUERIES
+    from tests.conftest import SF_DIR
+
+    sf_dir = tmp_path / "sf dir"
+    sf_dir.mkdir()
+    shutil.copy(f"{SF_DIR}/documents.parquet", sf_dir / "documents.parquet")
+
+    def plan_scans(gate_bytes: int) -> int:
+        monkeypatch.setenv("SPARK_GRAFT_DRIFT_PIN_BYTES", str(gate_bytes))
+        df = QUERIES["source_quality_drift"](spark, str(sf_dir))
+        return df._jdf.queryExecution().logical().toString().count("Relation")
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        pinned, unpinned = plan_scans(1), plan_scans(1 << 40)
+    assert not [w for w in caught if "source_quality_drift" in str(w.message)]
+    assert pinned < unpinned

@@ -507,34 +507,134 @@ def test_vacuum_drops_history_and_stale_dirs(spark, tmp_path):
     assert {r["v"] for r in t.read(spark).collect()} == {3.0}
 
 
-def test_merge_insert_only_appends_without_rewrite(spark, tmp_path):
-    """A batch whose keys are all new takes the append fast path: existing
-    data files are untouched (same inodes), result equals the union."""
+def _parquet_inodes(root: str) -> dict[str, int]:
+    """{data file path relative to ``root``: inode} over every partition."""
     import os
 
-    t = ParquetTable(str(tmp_path / "t"))
-    df = lambda rows: spark.createDataFrame(rows, "k string, v double")  # noqa: E731
-    t.merge(spark, df([("a", 1.0), ("b", 2.0)]), keys=["k"])
+    return {
+        os.path.relpath(os.path.join(d, f), root): os.stat(os.path.join(d, f)).st_ino
+        for d, _dirs, files in os.walk(root)
+        for f in files
+        if f.endswith(".parquet")
+    }
 
-    def inodes():
-        return {
-            f: os.stat(os.path.join(t.path, f)).st_ino
-            for f in os.listdir(t.path)
-            if f.endswith(".parquet")
-        }
 
-    before = inodes()
-    t.merge(spark, df([("c", 3.0)]), keys=["k"])  # disjoint keys -> append
-    after = inodes()
-    assert set(before).issubset(set(after))  # original files still present
-    assert all(after[f] == ino for f, ino in before.items())  # not rewritten
-    assert len(after) > len(before)
+def test_merge_insert_only_appends_without_rewrite(spark, tmp_path):
+    """A batch whose keys are all new takes the append fast path: existing
+    data files are untouched (same inodes), result equals the union. On a
+    partitioned table a matched batch then rewrites only its partition."""
+    df = lambda rows: spark.createDataFrame(  # noqa: E731
+        rows, "k string, v double, day string"
+    )
+    for name, parts in (("flat", []), ("part", ["day"])):
+        t = ParquetTable(str(tmp_path / name), partition_by=parts)
+        t.merge(spark, df([("a", 1.0, "d1"), ("b", 2.0, "d2")]), keys=["k"])
+        before = _parquet_inodes(t.path)
+        t.merge(spark, df([("c", 3.0, "d2")]), keys=["k"])  # disjoint keys -> append
+        after = _parquet_inodes(t.path)
+        assert set(before).issubset(set(after))  # original files still present
+        assert all(after[f] == ino for f, ino in before.items())  # not rewritten
+        assert len(after) > len(before)
+        got = {r["k"]: r["v"] for r in t.read(spark).collect()}
+        assert got == {"a": 1.0, "b": 2.0, "c": 3.0}
+        # A matched-key batch still takes the rewrite path and updates in place.
+        t.merge(spark, df([("a", 9.0, "d1")]), keys=["k"])
+        got = {r["k"]: r["v"] for r in t.read(spark).collect()}
+        assert got == {"a": 9.0, "b": 2.0, "c": 3.0}
+        if parts:
+            final = _parquet_inodes(t.path)
+            kept = {f for f in after if final.get(f) == after[f]}
+            assert kept == {f for f in after if f.startswith("day=d2")}
+
+
+def test_merge_evaluates_update_lineage_once(spark, tmp_path):
+    """merge pins its update set: the update lineage (here a counting UDF
+    on the key column, which every probe and the write read) is evaluated
+    once per call on the partitioned rewrite, the partitioned insert-only
+    append and the unpartitioned rewrite."""
+    evaluated = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def counted(k):
+        evaluated.add(1)
+        return k
+
+    schema = "k string, v double, day string"
+    base = [("a", 1.0, "d1"), ("b", 2.0, "d2")]
+    cases = [
+        ("part_rewrite", ["day"], [("a", 9.0, "d1"), ("c", 3.0, "d3")]),
+        ("part_append", ["day"], [("c", 3.0, "d1"), ("d", 4.0, "d4")]),
+        ("flat_rewrite", [], [("a", 9.0, "d1"), ("c", 3.0, "d3")]),
+    ]
+    for name, parts, rows in cases:
+        t = ParquetTable(str(tmp_path / name), partition_by=parts)
+        t.overwrite(spark.createDataFrame(base, schema))
+        updates = spark.createDataFrame(rows, schema).withColumn("k", counted("k"))
+        start = evaluated.value
+        t.merge(spark, updates, keys=["k"])
+        assert evaluated.value - start == len(rows), name
+        got = {r["k"]: r["v"] for r in t.read(spark).collect()}
+        assert got == {**dict((k, v) for k, v, _ in base), **{k: v for k, v, _ in rows}}
+
+
+def test_merge_string_partition_read_back_as_date(spark, tmp_path):
+    """A string partition column that partition discovery reads back as a
+    date: the update set carries strings, the target dates. The one key
+    probe must still touch exactly the updates' partitions plus the one a
+    key relocates out of — rewrite 2024-01-01 and 2024-01-03, drop the
+    emptied 2024-01-02, leave 2024-01-04's file alone — and lose no row."""
+    import os
+
+    schema = "user string, day string, v double"
+    t = ParquetTable(str(tmp_path / "part"), partition_by=["day"])
+    t.overwrite(
+        spark.createDataFrame(
+            [
+                ("u1", "2024-01-01", 1.0), ("u2", "2024-01-01", 2.0),
+                ("u3", "2024-01-02", 3.0),  # sole row of its partition
+                ("u4", "2024-01-04", 4.0),
+            ],
+            schema,
+        )
+    )
+    assert dict(t.read(spark).dtypes)["day"] == "date"
+    before = _parquet_inodes(t.path)
+    upd = spark.createDataFrame(
+        [("u1", "2024-01-01", 10.0), ("u3", "2024-01-03", 30.0)], schema
+    )
+    t.merge(spark, upd, keys=["user"])
+    after = _parquet_inodes(t.path)
+    assert sorted(d for d in os.listdir(t.path) if d.startswith("day=")) == [
+        "day=2024-01-01", "day=2024-01-03", "day=2024-01-04",
+    ]
+    assert {f for f in before if after.get(f) == before[f]} == {
+        f for f in before if f.startswith("day=2024-01-04")
+    }
+    got = {(r["user"], str(r["day"]), r["v"]) for r in t.read(spark).collect()}
+    assert got == {
+        ("u1", "2024-01-01", 10.0), ("u2", "2024-01-01", 2.0),
+        ("u3", "2024-01-03", 30.0), ("u4", "2024-01-04", 4.0),
+    }
+
+
+def test_composite_partition_pruning_fallback_warns(spark, tmp_path):
+    """Past the composite-partition cap, merge and delete_keys give up
+    pruning for a whole-table rewrite, and say so with the table path and
+    the partition count."""
+    t = ParquetTable(str(tmp_path / "t"), partition_by=["a", "b"])
+    schema = "k long, v double, a long, b long"
+    t.overwrite(
+        spark.createDataFrame([(i, 0.0, i % 2, i) for i in range(70)], schema)
+    )
+    upd = spark.createDataFrame([(i, 1.0, i % 2, i) for i in range(66)], schema)
+    with pytest.warns(UserWarning, match=rf"{t.path}: 66 composite partitions"):
+        t.merge(spark, upd, keys=["k"])
     got = {r["k"]: r["v"] for r in t.read(spark).collect()}
-    assert got == {"a": 1.0, "b": 2.0, "c": 3.0}
-    # A matched-key batch still takes the rewrite path and updates in place.
-    t.merge(spark, df([("a", 9.0)]), keys=["k"])
-    got = {r["k"]: r["v"] for r in t.read(spark).collect()}
-    assert got == {"a": 9.0, "b": 2.0, "c": 3.0}
+    assert got == {i: (1.0 if i < 66 else 0.0) for i in range(70)}
+    doomed = spark.createDataFrame([(i,) for i in range(65)], "k long")
+    with pytest.warns(UserWarning, match=rf"{t.path}: 65 composite partitions"):
+        assert t.delete_keys(spark, doomed, keys=["k"]) == 65
+    assert sorted(r["k"] for r in t.read(spark).collect()) == list(range(65, 70))
 
 
 def test_merge_evolving_batch_takes_append_path(spark, tmp_path):
