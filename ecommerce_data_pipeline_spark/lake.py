@@ -12,7 +12,7 @@ this module provides the same *semantics* over plain parquet:
   its transaction log.
 
 Scale design (100 TB): a full-table rewrite per merge is wrong at scale.
-The merge is built around three mitigations:
+The merge and read paths are built around four mitigations:
 
 1. **The update set is pinned once inside ``merge``.** A lazy
    ``localCheckpoint`` on the incremental path makes every pass over the
@@ -32,6 +32,15 @@ The merge is built around three mitigations:
    once by dynamic partition overwrite. A
    2-hour late-data merge then touches a handful of date partitions out of
    thousands — the I/O profile of a Delta MERGE with partition pruning.
+4. **The schema is recorded at write time.** Every write records the
+   table's schema in ``_schema.json`` inside the table directory (Spark's
+   file index skips ``_``-prefixed names), the way Delta serves it from
+   its log: ``overwrite`` stages it with the data before the swap, and
+   ``merge``/``delete_keys`` record it (the union schema after an evolving
+   update set) after the snapshot and before the data write, so a
+   snapshot keeps its own. A read then plans from the file listing alone,
+   with no schema-inference job; only a directory without the file falls
+   back to a ``mergeSchema`` footer scan.
 
 If delta-spark is importable the same API can delegate to a real
 ``DeltaTable.merge`` (file-level rewrite + transaction log).
@@ -43,6 +52,7 @@ expects redeliveries.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import uuid
@@ -50,6 +60,7 @@ import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 try:  # pragma: no cover - delta not bundled here
     from delta.tables import DeltaTable
@@ -64,6 +75,9 @@ except ImportError:
 # dirs on disk; f"{col}={value}" alone misses nulls and escaped values.
 _HIVE_ESCAPE_CHARS = set('"#%\'*/:=?\\{[]^') | {chr(c) for c in range(0x20)} | {"\x7f"}
 
+# The recorded schema of a table or snapshot directory (see "Scale design").
+SCHEMA_FILE = "_schema.json"
+
 # Largest composite-partition touch set pruned with a flat OR-of-AND
 # predicate; past it a rewrite covers the whole table (with a warning).
 _MAX_COMPOSITE_PARTITIONS = 64
@@ -76,6 +90,24 @@ def _hive_partition_value(v) -> str:
     return "".join(
         f"%{ord(ch):02X}" if ch in _HIVE_ESCAPE_CHARS else ch for ch in str(v)
     )
+
+
+def _as_nullable(t: dict) -> dict:
+    """A schema's JSON form with every field, element and value nullable —
+    what a parquet read reports whatever the writer declared."""
+    kind = t.get("type") if isinstance(t, dict) else None
+    if kind == "struct":
+        for f in t["fields"]:
+            f["nullable"] = True
+            f["type"] = _as_nullable(f["type"])
+    elif kind == "array":
+        t["containsNull"] = True
+        t["elementType"] = _as_nullable(t["elementType"])
+    elif kind == "map":
+        t["valueContainsNull"] = True
+        t["keyType"] = _as_nullable(t["keyType"])
+        t["valueType"] = _as_nullable(t["valueType"])
+    return t
 
 
 def sync_all_columns(
@@ -225,7 +257,7 @@ class ParquetTable:
             raise ValueError(
                 f"version {version} not archived (have {self.versions()})"
             )
-        return spark.read.option("mergeSchema", "true").parquet(vdir)
+        return self._read_dir(spark, vdir)
 
     def restore(self, spark: SparkSession, version: int) -> None:
         """Delta ``RESTORE TABLE ... TO VERSION AS OF`` parity: archive the
@@ -249,11 +281,36 @@ class ParquetTable:
     def read(self, spark: SparkSession) -> DataFrame:
         if self.use_delta:
             return spark.read.format("delta").load(self.path)
-        # mergeSchema: after an evolving merge, untouched partitions keep
-        # their pre-evolution files; the union schema (old files null-fill
-        # the appended columns) is what Delta would serve from its log. The
-        # footer-sampling cost is parallelized and paid at planning time.
-        return spark.read.option("mergeSchema", "true").parquet(self.path)
+        return self._read_dir(spark, self.path)
+
+    def _read_dir(self, spark: SparkSession, root: str) -> DataFrame:
+        """Read the table data under ``root`` with its recorded schema: the
+        plan needs only the file listing, no schema-inference job. After an evolving merge,
+        untouched partitions keep their pre-evolution files and the
+        recorded union schema null-fills the appended columns, as Delta
+        serves it from its log. A directory written without a recorded
+        schema infers one with a ``mergeSchema`` footer scan, a Spark job
+        per read."""
+        try:
+            with open(os.path.join(root, SCHEMA_FILE)) as fh:
+                schema = StructType.fromJson(json.load(fh))
+        except FileNotFoundError:
+            return spark.read.option("mergeSchema", "true").parquet(root)
+        return spark.read.schema(schema).parquet(root)
+
+    def _record_schema(self, root: str, schema: StructType) -> None:
+        """Record ``schema`` for the data under ``root`` as a read infers
+        it: data columns, then partition columns, all nullable. Replaced by
+        rename, so a snapshot hard-linked from the old file keeps it."""
+        parts = set(self.partition_by)
+        ordered = StructType(
+            [f for f in schema.fields if f.name not in parts]
+            + [schema[c] for c in self.partition_by]
+        )
+        path = os.path.join(root, SCHEMA_FILE)
+        with open(f"{path}.tmp", "w") as fh:
+            json.dump(_as_nullable(ordered.jsonValue()), fh)
+        os.replace(f"{path}.tmp", path)
 
     def repair_swap(self) -> dict:
         """Self-heal ``overwrite``'s swap crash window (the same
@@ -304,8 +361,9 @@ class ParquetTable:
     def overwrite(self, df: DataFrame) -> None:
         """Bootstrap write (operator S8: mode=overwrite, overwriteSchema).
 
-        Atomic: materialize to a sibling temp dir, then swap directories, so
-        readers never observe a partial table. Delta tables get atomicity
+        Atomic: materialize to a sibling temp dir, record the schema there,
+        then swap directories, so readers never observe a partial table and
+        schema and data commit together. Delta tables get atomicity
         from the transaction log instead — a plain overwrite commit. A
         crash inside the swap self-heals on the next overwrite (or an
         explicit ``repair_swap()``) — see that method for the contract.
@@ -327,6 +385,7 @@ class ParquetTable:
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(tmp)
+        self._record_schema(tmp, df.schema)
         old = f"{self.path}__old_{uuid.uuid4().hex[:8]}"
         if os.path.exists(self.path):
             os.rename(self.path, old)
@@ -359,6 +418,10 @@ class ParquetTable:
         lives (a redelivered event with a corrected event_date — its stale
         row must not survive and duplicate the key). Only those partitions
         are rewritten, staged in the block manager (see ``_rewrite``).
+        Either way the table's schema — the union schema after an evolving
+        update set — is recorded after the snapshot and before the data
+        write, so a snapshot keeps its own schema and the live one covers
+        every live file.
 
         An unpartitioned table probes for any matched key (a column-pruned
         semi-join with an early-out limit(1)) and appends when there is
@@ -469,6 +532,7 @@ class ParquetTable:
             # Kafka (topic,partition,offset) key is new) and the difference
             # between O(batch) and O(table) I/O per trigger at scale.
             self._archive()
+            self._record_schema(self.path, target.schema)
             writer = updates.write.mode("append")
             if self.partition_by:
                 writer = writer.partitionBy(*self.partition_by)
@@ -554,6 +618,7 @@ class ParquetTable:
         ]
         before = {d: listing(d) for d in dirs}
         self._archive()
+        self._record_schema(self.path, target.schema)
         (
             rows.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

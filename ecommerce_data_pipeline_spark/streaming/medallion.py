@@ -196,11 +196,15 @@ def run_streaming_pipeline(
         )
         return max(1, -(-n // max(1, silver_batches)))  # ceil(n/batches)
 
-    def _start_silver(bronze_table, suffix: str, silver_fn):
+    def _start_silver(bronze_table, src_dir, src_schema, suffix: str, silver_fn):
         """Start (asynchronously) the silver stream over a fully-drained
         bronze dir; every path (checkpoint, bronze dir, silver table) is
-        stream-private."""
-        bronze_schema = spark.read.parquet(bronze_table.path).schema
+        stream-private. The bronze files hold ``bronze_projection`` of the
+        source stream, so their schema comes from analysing that
+        projection, not from a schema-inference job over the bronze dir."""
+        bronze_schema = bronze_projection(
+            _read_stream(spark, src_dir, src_schema, 1)
+        ).schema
         return (
             _read_stream(
                 spark,
@@ -238,11 +242,19 @@ def run_streaming_pipeline(
     # bronze-payments may still be draining (see the docstring's stall
     # note for why this is not done from a thread pool).
     q1.awaitTermination()
-    s1 = _start_silver(lake.bronze_orders, "orders", _silver_orders_batch)
+    s1 = _start_silver(
+        lake.bronze_orders, orders_src, orders_schema, "orders", _silver_orders_batch
+    )
     q2.awaitTermination()
     t_bronze_done = _t()
     _mark("bronze_drain_sec", t_bronze_done - t_chains)
-    s2 = _start_silver(lake.bronze_payments, "payments", _silver_payments_batch)
+    s2 = _start_silver(
+        lake.bronze_payments,
+        payments_src,
+        payments_schema,
+        "payments",
+        _silver_payments_batch,
+    )
     s1.awaitTermination()
     s2.awaitTermination()
     _mark("silver_drain_sec", _t() - t_bronze_done)

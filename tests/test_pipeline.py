@@ -380,7 +380,9 @@ def test_merge_schema_evolution_sync_all_columns(spark, tmp_path):
     retains columns it dropped (null-filled in new rows), and never
     rewrites untouched partitions — their files keep the old schema and
     the union read serves nulls."""
-    t = ParquetTable(str(tmp_path / "t"), partition_by=["event_date"])
+    t = ParquetTable(
+        str(tmp_path / "t"), partition_by=["event_date"], keep_versions=1
+    )
     d1, d2 = dt.date(2024, 1, 1), dt.date(2024, 1, 2)
     t.merge(
         spark,
@@ -407,6 +409,13 @@ def test_merge_schema_evolution_sync_all_columns(spark, tmp_path):
         "b": (None, "kafka", "2024-01-02"),  # updated: v dropped, source set
         "c": (None, "s3", "2024-01-02"),  # inserted under the union schema
     }
+    # The snapshot keeps its pre-evolution schema; the live recorded schema
+    # is what a footer-merging read of every live file infers.
+    assert "source" not in t.read_version(spark, 0).columns
+    assert (
+        t.read(spark).dtypes
+        == spark.read.option("mergeSchema", "true").parquet(t.path).dtypes
+    )
     # Untouched partition's files were NOT rewritten (still the old schema).
     import os
 
@@ -579,42 +588,87 @@ def test_merge_evaluates_update_lineage_once(spark, tmp_path):
 
 def test_merge_string_partition_read_back_as_date(spark, tmp_path):
     """A string partition column that partition discovery reads back as a
-    date: the update set carries strings, the target dates. The one key
-    probe must still touch exactly the updates' partitions plus the one a
-    key relocates out of — rewrite 2024-01-01 and 2024-01-03, drop the
+    date. With a recorded schema it reads back a string; a legacy table
+    without one (schema file deleted) is read by discovery as a date, so
+    the update set carries strings and the target dates. Either way the
+    one key probe must touch exactly the updates' partitions plus the one
+    a key relocates out of — rewrite 2024-01-01 and 2024-01-03, drop the
     emptied 2024-01-02, leave 2024-01-04's file alone — and lose no row."""
     import os
 
+    from ecommerce_data_pipeline_spark.lake import SCHEMA_FILE
+
     schema = "user string, day string, v double"
-    t = ParquetTable(str(tmp_path / "part"), partition_by=["day"])
-    t.overwrite(
-        spark.createDataFrame(
-            [
-                ("u1", "2024-01-01", 1.0), ("u2", "2024-01-01", 2.0),
-                ("u3", "2024-01-02", 3.0),  # sole row of its partition
-                ("u4", "2024-01-04", 4.0),
-            ],
-            schema,
+    for name, recorded in (("part", True), ("legacy", False)):
+        t = ParquetTable(str(tmp_path / name), partition_by=["day"])
+        t.overwrite(
+            spark.createDataFrame(
+                [
+                    ("u1", "2024-01-01", 1.0), ("u2", "2024-01-01", 2.0),
+                    ("u3", "2024-01-02", 3.0),  # sole row of its partition
+                    ("u4", "2024-01-04", 4.0),
+                ],
+                schema,
+            )
         )
-    )
-    assert dict(t.read(spark).dtypes)["day"] == "date"
-    before = _parquet_inodes(t.path)
-    upd = spark.createDataFrame(
-        [("u1", "2024-01-01", 10.0), ("u3", "2024-01-03", 30.0)], schema
-    )
-    t.merge(spark, upd, keys=["user"])
-    after = _parquet_inodes(t.path)
-    assert sorted(d for d in os.listdir(t.path) if d.startswith("day=")) == [
-        "day=2024-01-01", "day=2024-01-03", "day=2024-01-04",
+        if not recorded:
+            os.remove(os.path.join(t.path, SCHEMA_FILE))
+        assert dict(t.read(spark).dtypes)["day"] == ("string" if recorded else "date")
+        before = _parquet_inodes(t.path)
+        upd = spark.createDataFrame(
+            [("u1", "2024-01-01", 10.0), ("u3", "2024-01-03", 30.0)], schema
+        )
+        t.merge(spark, upd, keys=["user"])
+        after = _parquet_inodes(t.path)
+        assert sorted(d for d in os.listdir(t.path) if d.startswith("day=")) == [
+            "day=2024-01-01", "day=2024-01-03", "day=2024-01-04",
+        ], name
+        assert {f for f in before if after.get(f) == before[f]} == {
+            f for f in before if f.startswith("day=2024-01-04")
+        }, name
+        got = {(r["user"], str(r["day"]), r["v"]) for r in t.read(spark).collect()}
+        assert got == {
+            ("u1", "2024-01-01", 10.0), ("u2", "2024-01-01", 2.0),
+            ("u3", "2024-01-03", 30.0), ("u4", "2024-01-04", 4.0),
+        }, name
+
+
+def test_read_plans_without_a_job(spark, tmp_path):
+    """A partitioned table read plans from its recorded schema: no Spark
+    job (no footer-merging schema inference) after an overwrite, an
+    insert-only merge and an evolving merge."""
+    sc = spark.sparkContext
+    t = ParquetTable(str(tmp_path / "t"), partition_by=["day"])
+    d1, d2 = dt.date(2024, 1, 1), dt.date(2024, 1, 2)
+    writes = [
+        lambda: t.overwrite(
+            spark.createDataFrame([("a", 1.0, d1)], "k string, v double, day date")
+        ),
+        lambda: t.merge(  # new key: insert-only append
+            spark,
+            spark.createDataFrame([("b", 2.0, d2)], "k string, v double, day date"),
+            keys=["k"],
+        ),
+        lambda: t.merge(  # new column, matched key: evolving rewrite
+            spark,
+            spark.createDataFrame(
+                [("b", "s3", d2)], "k string, source string, day date"
+            ),
+            keys=["k"],
+        ),
     ]
-    assert {f for f in before if after.get(f) == before[f]} == {
-        f for f in before if f.startswith("day=2024-01-04")
-    }
-    got = {(r["user"], str(r["day"]), r["v"]) for r in t.read(spark).collect()}
-    assert got == {
-        ("u1", "2024-01-01", 10.0), ("u2", "2024-01-01", 2.0),
-        ("u3", "2024-01-03", 30.0), ("u4", "2024-01-04", 4.0),
-    }
+    for i, write in enumerate(writes):
+        write()
+        group = f"read-plans-without-a-job-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            columns = t.read(spark).columns
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], i
+        assert columns == ["k", "v"] + (["source"] if i == 2 else []) + ["day"]
+    got = {r["k"]: (r["v"], r["source"]) for r in t.read(spark).collect()}
+    assert got == {"a": (1.0, None), "b": (None, "s3")}
 
 
 def test_composite_partition_pruning_fallback_warns(spark, tmp_path):

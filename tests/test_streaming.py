@@ -25,12 +25,22 @@ from tests.conftest import SF_DIR, ts
 
 
 @pytest.fixture(scope="module")
-def streamed_lake(spark, tmp_path_factory):
+def stream_sources(spark, tmp_path_factory):
+    """The staged order and payment event files: {stream: (dir, schema)}."""
+    root = tmp_path_factory.mktemp("stream-src")
+    out = {}
+    for name, events in (("orders", orders_events), ("payments", payments_events)):
+        src = str(root / name)
+        out[name] = (src, stage_event_files(spark, events(spark, SF_DIR), src))
+    return out
+
+
+@pytest.fixture(scope="module")
+def streamed_lake(spark, tmp_path_factory, stream_sources):
     root = tmp_path_factory.mktemp("stream")
-    orders_src = str(root / "src/orders")
-    payments_src = str(root / "src/payments")
-    o_schema = stage_event_files(spark, orders_events(spark, SF_DIR), orders_src)
-    p_schema = stage_event_files(spark, payments_events(spark, SF_DIR), payments_src)
+    (orders_src, o_schema), (payments_src, p_schema) = (
+        stream_sources["orders"], stream_sources["payments"]
+    )
     lake = pipeline.Lakehouse(str(root / "lake"))
     run_streaming_pipeline(
         spark,
@@ -71,6 +81,25 @@ def test_streaming_bronze_checkpointed(spark, streamed_lake):
     bronze_n = streamed_lake.bronze_orders.read(spark).count()
     silver_n = streamed_lake.silver_orders.read(spark).count()
     assert bronze_n > silver_n  # the %20==0 redelivery dups
+
+
+def test_silver_stream_bronze_schema_from_projection(
+    spark, streamed_lake, stream_sources
+):
+    """The silver streams take the bronze schema from analysing
+    ``bronze_projection`` of the source stream instead of a schema job
+    over the bronze dir; that schema is the one the bronze files hold."""
+    from ecommerce_data_pipeline_spark.operators.parse import bronze_projection
+
+    for name, bronze in (
+        ("orders", streamed_lake.bronze_orders),
+        ("payments", streamed_lake.bronze_payments),
+    ):
+        src_dir, src_schema = stream_sources[name]
+        analysed = bronze_projection(
+            spark.readStream.schema(src_schema).parquet(src_dir)
+        )
+        assert analysed.dtypes == spark.read.parquet(bronze.path).dtypes, name
 
 
 def test_streaming_silver_replay_idempotent(spark, streamed_lake):
