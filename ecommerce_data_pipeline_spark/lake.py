@@ -709,8 +709,11 @@ class ParquetTable:
         interrupted writes. Returns the number of dirs removed.
         Hard-linked files release disk only once the last snapshot
         referencing them is removed — exactly Delta's data/log retention
-        split."""
-        removed = 0
+        split. An ``overwrite`` that crashed between its two renames is
+        rolled back first (``repair_swap``): its ``__old_*`` dir holds
+        the last committed data, so the sweep must not delete it."""
+        swap = self.repair_swap()
+        removed = len(swap["removed_old"]) + len(swap["removed_tmp"])
         vs = self.versions()
         for stale in vs[: max(0, len(vs) - retain_versions)]:
             shutil.rmtree(

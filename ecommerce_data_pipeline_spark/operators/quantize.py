@@ -17,9 +17,17 @@ k-means quality needs ~100×k points, not the corpus — then assign the full
 corpus with one map stage. Empty cells keep their previous centroid
 (standard Lloyd degeneracy handling). Multi-probe search widens recall by
 scoring the ``nprobe`` nearest cells per query instead of one.
+
+Every search here ranks through operators/similarity.py's one ranker
+(``rank_topk``; ``cosine_rank`` for cosine scores), and ``ivf_pq_topk``
+is composed from this module's routing, PQ code, ADC and codebook-fit
+primitives rather than copies of them.
 """
 
 from __future__ import annotations
+
+from functools import reduce
+from operator import add
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -28,6 +36,9 @@ from ecommerce_data_pipeline_spark.operators.similarity import (
     _as_double,
     _dot,
     _norm,
+    cosine_rank,
+    rank_topk,
+    topk_within_cells,
 )
 
 
@@ -211,37 +222,6 @@ def multiprobe_route(
     ).withColumn("qn", _norm(F.col("q_vec")))
 
 
-def topk_within_cells(corpus: DataFrame, probed: DataFrame, k: int = 5) -> DataFrame:
-    """Score routed probes against a cell-assigned corpus and keep the
-    top-k per probe. ``corpus`` carries (neighbor_id, n_vec, cell) —
-    from ``assign_cells`` or read back from a cell-partitioned posting
-    layout (operators/postings.py) — and ``probed`` is
-    ``multiprobe_route`` output. Same output shape as cosine_topk."""
-    from pyspark.sql.window import Window
-
-    scored = (
-        corpus.withColumn("nn", _norm(F.col("n_vec")))
-        .join(F.broadcast(probed), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine_sim",
-            F.round(
-                _dot(F.col("q_vec"), F.col("n_vec")) / (F.col("qn") * F.col("nn")),
-                4,
-            ),
-        )
-        .select("query_id", "neighbor_id", "cosine_sim")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
-
-
 def multiprobe_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -403,13 +383,20 @@ def pq_fit(
     path). While the corpus is under the cap the sampled and full paths
     collect the SAME rows in the same md5 order, so codebooks are
     bit-identical — the oracle-certified embeddings fixtures are pinned
-    below the cap by tests/test_round9_new.py, and
-    tests/test_round17_opt.py pins the capped/uncapped equality plus the
-    cap actually binding past 100k. Pass ``fit_sample=None`` only as the
-    explicit small-data escape hatch, never at 1B-vector scale."""
-    x = _fit_sample_matrix(vectors, id_col, vec_col, fit_sample)
+    below the cap by tests/test_round9_new.py, and tests/test_quantize.py
+    pins the capped/uncapped equality plus the cap actually binding.
+    Pass ``fit_sample=None`` only as the explicit small-data escape
+    hatch, never at 1B-vector scale."""
+    return _pq_books(
+        _fit_sample_matrix(vectors, id_col, vec_col, fit_sample), m, k, iters
+    )
+
+
+def _pq_books(x, m: int, k: int, iters: int) -> list[list[list[float]]]:
+    """The m per-subspace Lloyd's fits over one collected fit-sample
+    matrix: subspace s is columns [s*dim/m, (s+1)*dim/m)."""
     if not len(x):
-        raise ValueError("pq_fit: empty vector table")
+        raise ValueError("empty vector table")
     dim = x.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
@@ -427,15 +414,33 @@ def pq_encode(
 ) -> DataFrame:
     """(id, pq_codes ARRAY<INT>): each subvector's argmin-centroid code —
     one map stage, m×k distance expressions in codegen, no shuffle."""
+    codes = _pq_codes(_as_double(F.col(vec_col)), codebooks)
+    return vectors.select(F.col(id_col), codes.alias("pq_codes"))
+
+
+def _pq_codes(v: Column, codebooks: list[list[list[float]]]) -> Column:
+    """ARRAY<INT> of each dim/m-wide subvector's argmin-centroid code."""
     d_sub = len(codebooks[0][0])
-    v = _as_double(F.col(vec_col))
-    codes = F.array(
+    return F.array(
         *[
             _cell_expr(F.slice(v, s * d_sub + 1, d_sub), cb)
             for s, cb in enumerate(codebooks)
         ]
     )
-    return vectors.select(F.col(id_col), codes.alias("pq_codes"))
+
+
+def _adc_d2(codebooks: list[list[list[float]]]) -> Column:
+    """4-dp asymmetric distance from the ``q_vec`` column to the vector
+    coded in ``pq_codes``: Σ_s d2(q_s, codebook[s][code_s])."""
+    d_sub = len(codebooks[0][0])
+    terms = [
+        _dist2_col(
+            F.slice(F.col("q_vec"), s * d_sub + 1, d_sub),
+            F.element_at(_centroid_lit(cb), F.element_at("pq_codes", s + 1) + 1),
+        )
+        for s, cb in enumerate(codebooks)
+    ]
+    return F.round(reduce(add, terms), 4)
 
 
 def pq_adc_topk(
@@ -454,38 +459,18 @@ def pq_adc_topk(
     broadcast of m×k centroids. Output: (query_id, neighbor_id, adc_d2,
     rank) — adc_d2 rounded to 4 dp, ranked with neighbor_id tiebreak.
     """
-    from pyspark.sql.window import Window
-
-    d_sub = len(codebooks[0][0])
     codes = pq_encode(vectors, codebooks, id_col, vec_col).select(
         F.col(id_col).alias("neighbor_id"), "pq_codes"
     )
     qv = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("q_vec")
     )
-    adc = None
-    for s, cb in enumerate(codebooks):
-        q_s = F.slice(F.col("q_vec"), s * d_sub + 1, d_sub)
-        cent = F.element_at(
-            _centroid_lit(cb), F.element_at("pq_codes", s + 1) + 1
-        )
-        term = _dist2_col(q_s, cent)
-        adc = term if adc is None else adc + term
     scored = (
         codes.crossJoin(F.broadcast(qv))
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(adc, 4).alias("adc_d2"),
-        )
+        .select("query_id", "neighbor_id", _adc_d2(codebooks).alias("adc_d2"))
     )
-    w = Window.partitionBy("query_id").orderBy("adc_d2", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_d2", "rank")
-    )
+    return rank_topk(scored, k, F.col("adc_d2"))
 
 
 def ivf_pq_rerank_topk(
@@ -518,8 +503,6 @@ def ivf_pq_rerank_topk(
 
     Output: (query_id, neighbor_id, cosine_sim, rank), rank <= k.
     """
-    from pyspark.sql.window import Window
-
     # The shortlist is pinned with localCheckpoint: it is |Q| × k' rows
     # (tiny), but its lineage is the whole IVFPQ index build — centroid
     # literal trees for the coarse + m subspace codebooks — which would
@@ -550,27 +533,10 @@ def ivf_pq_rerank_topk(
         F.col(id_col).alias("query_id"),
         _as_double(F.col(vec_col)).alias("q_vec"),
     ).withColumn("qn", _norm(F.col("q_vec")))
-    rescored = (
-        nv.join(F.broadcast(short), "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("q_vec"), F.col("n_vec"))
-                / (F.col("qn") * F.col("nn")),
-                4,
-            ).alias("cosine_sim"),
-        )
+    pairs = nv.join(F.broadcast(short), "neighbor_id").join(
+        F.broadcast(qv), "query_id"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), "neighbor_id"
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return cosine_rank(pairs, k)
 
 
 def matryoshka_audit(
@@ -624,84 +590,34 @@ def ivf_pq_topk(
     routing bounds WHICH vectors are scored (nprobe/n_cells of the
     corpus per query) and PQ asymmetric distance bounds WHAT is read to
     score them (the m-int code column — the float corpus never leaves
-    disk). Routing is the multiprobe cell equi-join, scoring is the ADC
-    codebook lookup; both stages reuse the deterministic fits
-    (md5-order init, fixed iterations) so a SQL oracle can replay the
-    whole index build + search.
+    disk). It is a composition of this module's primitives: routing is
+    ``multiprobe_route``, the corpus codes are ``pq_encode``'s, the score
+    is ``pq_adc_topk``'s ADC and the codebooks are ``pq_fit``'s. Every
+    fit is deterministic (md5-order init, fixed iterations) so a SQL
+    oracle can replay the whole index build + search.
 
     Output: (query_id, neighbor_id, adc_d2, rank) over probed cells only.
     """
-    from pyspark.sql.window import Window
-
     # ONE fit collect feeds both fits: the coarse quantizer and every PQ
-    # subspace train on the same smallest-md5(id) DEFAULT_FIT_SAMPLE rows
-    # kmeans_fit's and pq_fit's default sampled paths would each have
-    # collected — identical rows in identical md5 order, so centroids are
-    # bit-identical to calling the two fits separately, with ONE bounded
-    # driver collect instead of two (r17: previously this collected the
-    # FULL corpus because pq_fit defaulted to fit_sample=None — the last
-    # unbounded data-sized collect in a query path, VERDICT r16 ask #2).
+    # subspace train on the smallest-md5(id) DEFAULT_FIT_SAMPLE rows that
+    # kmeans_fit's and pq_fit's default sampled paths would each collect —
+    # identical rows in identical md5 order, so centroids are bit-identical
+    # to calling the two fits separately.
     x = _fit_sample_matrix(vectors, id_col, vec_col, DEFAULT_FIT_SAMPLE)
-    if not len(x):
-        raise ValueError("ivf_pq_topk: empty vector table")
+    books = _pq_books(x, m, pq_k, pq_iters)
     coarse = _lloyd(x, n_cells, coarse_iters)
-    if x.shape[1] % m:
-        raise ValueError(f"dim {x.shape[1]} not divisible by m {m}")
-    d_sub_fit = x.shape[1] // m
-    books = [
-        _lloyd(x[:, s * d_sub_fit : (s + 1) * d_sub_fit], pq_k, pq_iters)
-        for s in range(m)
-    ]
-    # Cell id and PQ codes are both pure per-row expressions over the same
-    # vector — compute them in ONE projection instead of joining two
-    # single-column derivations of the table back together on id (the join
-    # shuffled the corpus twice for values a single map stage produces).
+    # Cell id and PQ codes are both per-row expressions over the same
+    # vector: ONE projection, not two derivations joined back on id.
     v = _as_double(F.col(vec_col))
-    d_sub_enc = len(books[0][0])
     corpus = vectors.select(
         F.col(id_col).alias("neighbor_id"),
         _cell_expr(v, coarse).alias("cell"),
-        F.array(
-            *[
-                _cell_expr(F.slice(v, s * d_sub_enc + 1, d_sub_enc), cb)
-                for s, cb in enumerate(books)
-            ]
-        ).alias("pq_codes"),
+        _pq_codes(v, books).alias("pq_codes"),
     )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("q_vec")
-    )
-    dists = F.transform(
-        _centroid_lit(coarse),
-        lambda c, i: F.struct(
-            _dist2_col(F.col("q_vec"), c).alias("d"), i.alias("cell")
-        ),
-    )
-    probed = qv.withColumn(
-        "cell",
-        F.explode(
-            F.transform(
-                F.slice(F.array_sort(dists), 1, nprobe), lambda s: s["cell"]
-            )
-        ),
-    )
-    d_sub = len(books[0][0])
-    adc = None
-    for s, cb in enumerate(books):
-        q_s = F.slice(F.col("q_vec"), s * d_sub + 1, d_sub)
-        cent = F.element_at(
-            _centroid_lit(cb), F.element_at("pq_codes", s + 1) + 1
-        )
-        term = _dist2_col(q_s, cent)
-        adc = term if adc is None else adc + term
+    probed = multiprobe_route(queries, coarse, nprobe, id_col, vec_col)
     scored = (
         corpus.join(F.broadcast(probed), "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", F.round(adc, 4).alias("adc_d2"))
+        .select("query_id", "neighbor_id", _adc_d2(books).alias("adc_d2"))
     )
-    w = Window.partitionBy("query_id").orderBy("adc_d2", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_d2", "rank")
-    )
+    return rank_topk(scored, k, F.col("adc_d2"))

@@ -1,21 +1,26 @@
 """Similarity search over embedding columns (engine extension).
 
-Brute-force cosine top-k as the exactness baseline, and a bucketed
-(IVF-style) variant as the scale path. All vector math is built-in array
-expressions (zip_with + aggregate) — JVM-side, no Python UDF, no shuffle for
-the math itself.
+Brute-force cosine top-k as the exactness baseline, and cell-pruned
+(IVF-style) variants. All vector math is built-in array expressions
+(zip_with + aggregate) — JVM-side, no Python UDF, no shuffle for the math
+itself.
+
+Every vector top-k in the engine ends in one ranker, ``rank_topk``: a
+``row_number`` over ``query_id`` filtered to rank <= k. Spark's
+WindowGroupLimit rule recognizes that shape and keeps each partition's
+local top-k per query before the exchange (Sort + WindowGroupLimit
+Partial below the Exchange), so the shuffle moves at most
+|Q| * k * n_partitions rows, not the |Q| * |corpus| scored pairs.
+``cosine_rank`` is the cosine-scored front of it.
 
 Scale notes (100 TB / billions of vectors):
 - brute force scores map-side (broadcast of the small query set — no
-  shuffle to score), then takes per-query top-k with a window, which
-  SHUFFLES ALL |Q|×|corpus| scored rows on query_id: per-key partial
-  top-k is not expressible with built-in aggregates (collect_list partial
-  buffers carry every row). That is the honest cost of the exact baseline —
-  it is the verifier / small-|Q| path.
-- the SCALE path is ivf_topk: prune the corpus to the query's cell before
-  scoring, so both the scoring work and the top-k shuffle shrink by
-  ~1/n_cells. Cells come from any coarse quantizer (here: the precomputed
-  ``label`` column, standing in for a k-means assignment step).
+  shuffle to score); the scoring WORK is still |Q| * |corpus|, so it is
+  the verifier / small-|Q| path.
+- the scale path prunes the corpus to the query's cells before scoring
+  (``topk_within_cells``), so the scoring work shrinks by ~nprobe/n_cells.
+  Cells come from a coarse quantizer: the k-means fits in
+  operators/quantize.py, or any precomputed cell column (``ivf_topk``).
 """
 
 from __future__ import annotations
@@ -47,32 +52,45 @@ def _as_double(c: Column) -> Column:
     return c.cast("array<double>")
 
 
+def rank_topk(scored: DataFrame, k: int, score: Column) -> DataFrame:
+    """Per-query top-k of a (query_id, neighbor_id, score) frame: rank by
+    ``score`` (a sort order, e.g. ``F.col("cosine_sim").desc()``) with a
+    neighbor_id tiebreak for determinism, keep rank <= k. Output: the
+    scored columns plus ``rank``."""
+    w = Window.partitionBy("query_id").orderBy(score, F.col("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def cosine_rank(pairs: DataFrame, k: int) -> DataFrame:
+    """Score candidate pairs — (query_id, neighbor_id, q_vec, qn, n_vec,
+    nn), norms precomputed per vector — by 4-dp cosine (the oracle's
+    dot/(qn*nn) shape) and keep each query's top-k.
+    Output: (query_id, neighbor_id, cosine_sim, rank)."""
+    scored = pairs.select(
+        "query_id",
+        "neighbor_id",
+        F.round(
+            _dot(F.col("q_vec"), F.col("n_vec")) / (F.col("qn") * F.col("nn")), 4
+        ).alias("cosine_sim"),
+    )
+    return rank_topk(scored, k, F.col("cosine_sim").desc())
+
+
 def cosine_topk(
     vectors: DataFrame,
     queries: DataFrame,
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    prereduce: bool = False,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
     ``queries`` is expected to be small (it is broadcast); self-matches are
-    excluded. Ties broken by neighbor id for determinism.
-
-    The rank-filter-over-window shape below is recognized by Spark >= 3.5's
-    WindowGroupLimit rule: each scan partition keeps only its local top-k
-    per query JVM-side BEFORE the exchange, so the shuffle moves at most
-    |Q| * k * n_partitions rows, not |Q| * |corpus| — exactly the
-    prereduce this operator needs, for free and inside codegen (verify
-    with .explain(): Sort+WindowGroupLimit below the Exchange).
-
-    ``prereduce=True`` adds the same local top-k as an Arrow-batched Pandas
-    fold instead. It predates WindowGroupLimit and is now redundant —
-    solo-benched ~1.8s either way at sf0.1 steady-state, with the Pandas
-    hop only adding Python-worker startup on cold runs — but is kept (off
-    by default) for engines/configs where the rule is unavailable, and
-    equality-tested against the built-in path in test_operators.py.
+    excluded. Ties broken by neighbor id for determinism; the per-query
+    top-k is ``rank_topk``'s, so the shuffle carries only each scan
+    partition's local top-k.
     Output: (query_id, neighbor_id, cosine_sim, rank).
     """
     q = queries.select(
@@ -81,43 +99,8 @@ def cosine_topk(
     v = vectors.select(
         F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("n_vec")
     ).withColumn("nn", _norm(F.col("n_vec")))
-    scored = (
-        v.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine_sim",
-            F.round(
-                _dot(F.col("q_vec"), F.col("n_vec")) / (F.col("qn") * F.col("nn")), 4
-            ),
-        )
-        .select("query_id", "neighbor_id", "cosine_sim")
-    )
-    if prereduce:
-
-        def _local_topk(batches):
-            import pandas as pd
-
-            # Fold ACROSS the partition's Arrow batches (a partition
-            # arrives as many ~10k-row batches): keep a running top-k per
-            # query so the partition emits exactly |Q|*k rows, not
-            # |Q|*k*n_batches. Memory stays bounded at |Q|*k + one batch.
-            acc = None
-            for pdf in batches:
-                acc = pdf if acc is None else pd.concat([acc, pdf], ignore_index=True)
-                acc = acc.sort_values(
-                    ["query_id", "cosine_sim", "neighbor_id"],
-                    ascending=[True, False, True],
-                ).groupby("query_id", sort=False).head(k)
-            if acc is not None:
-                yield acc
-
-        scored = scored.mapInPandas(_local_topk, schema=scored.schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
+    return cosine_rank(
+        v.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")), k
     )
 
 
@@ -174,6 +157,21 @@ def embedding_near_dup_pairs(
     )
 
 
+def topk_within_cells(corpus: DataFrame, probed: DataFrame, k: int = 5) -> DataFrame:
+    """Score routed probes against a cell-assigned corpus and keep the
+    top-k per probe. ``corpus`` carries (neighbor_id, n_vec, cell) —
+    from ``assign_cells``, a precomputed cell column, or read back from a
+    cell-partitioned posting layout (operators/postings.py) — and
+    ``probed`` carries (query_id, q_vec, qn, cell), e.g.
+    ``multiprobe_route`` output. Same output shape as cosine_topk."""
+    pairs = (
+        corpus.withColumn("nn", _norm(F.col("n_vec")))
+        .join(F.broadcast(probed), "cell")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+    )
+    return cosine_rank(pairs, k)
+
+
 def ivf_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -182,41 +180,24 @@ def ivf_topk(
     vec_col: str = "embedding",
     cell_col: str = "label",
 ) -> DataFrame:
-    """IVF-style ANN: score only vectors in the query's cell.
+    """IVF-style ANN over a precomputed cell column: score only vectors in
+    the query's cell (``topk_within_cells`` with one probe per query).
 
-    The cell assignment (``label``) plays the role of the coarse-quantizer
-    centroid id; the join on cell id makes the scored set 1/n_cells of the
-    corpus. Same output shape as cosine_topk.
+    ``cell_col`` plays the role of the coarse-quantizer centroid id; the
+    join on cell id makes the scored set 1/n_cells of the corpus. Same
+    output shape as cosine_topk.
     """
-    q = queries.select(
+    corpus = vectors.select(
+        F.col(id_col).alias("neighbor_id"),
+        _as_double(F.col(vec_col)).alias("n_vec"),
+        F.col(cell_col).alias("cell"),
+    )
+    probed = queries.select(
         F.col(id_col).alias("query_id"),
         _as_double(F.col(vec_col)).alias("q_vec"),
         F.col(cell_col).alias("cell"),
     ).withColumn("qn", _norm(F.col("q_vec")))
-    v = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(F.col(vec_col)).alias("n_vec"),
-        F.col(cell_col).alias("cell"),
-    ).withColumn("nn", _norm(F.col("n_vec")))
-    scored = (
-        v.join(F.broadcast(q), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine_sim",
-            F.round(
-                _dot(F.col("q_vec"), F.col("n_vec")) / (F.col("qn") * F.col("nn")), 4
-            ),
-        )
-        .select("query_id", "neighbor_id", "cosine_sim")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return topk_within_cells(corpus, probed, k)
 
 
 def embedding_near_dup_pairs_blocked(
@@ -315,8 +296,8 @@ def mmr_rerank(
     retrieval per query, then the greedy MMR selection
     ``argmax lam*rel(d) - (1-lam)*max_{s in S} sim(d, s)``.
 
-    Scale: the retrieval stage is cosine_topk (WindowGroupLimit
-    prereduce); everything after operates on |Q|*k_candidates candidate
+    Scale: the retrieval stage is cosine_topk (WindowGroupLimit local
+    top-k); everything after operates on |Q|*k_candidates candidate
     rows and |Q|*k_candidates^2 pairwise-sim rows — linear in the query
     count, independent of corpus size.
 

@@ -581,7 +581,7 @@ def q_knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-quality eval harness: 5-NN majority-vote label recovery
     for the held-out query split — the standard kNN probe that turns a
     retrieval stack into a measurable classifier. Reuses the exact
-    cosine_topk plan (WindowGroupLimit prereduce) + one vote window.
+    cosine_topk plan (WindowGroupLimit local top-k) + one vote window.
 
     100x SCALE POLICY (SCALE.md §10): this exact query-x-corpus scan is
     the eval harness for a BOUNDED probe set — the query side must stay a

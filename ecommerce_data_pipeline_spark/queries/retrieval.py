@@ -514,7 +514,7 @@ def q_video_frame_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sampled video frames as first-class retrieval citizens: real
     container parse → every-2nd-frame sample → 64-dim frame vectors
     (operators/multimodal.video_frame_vectors) → exact cosine top-3
-    against the embeddings corpus (WindowGroupLimit prereduce shape,
+    against the embeddings corpus (WindowGroupLimit local top-k,
     operators/similarity.cosine_topk). The broadcast side is the sampled
     query frames (a bounded probe set: |docs|/40 x ~2 frames — fixed-size
     by policy, SCALE.md §10), never the corpus."""
@@ -1542,6 +1542,8 @@ def q_ivf_postings_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         assign_cells,
         kmeans_fit,
         multiprobe_route,
+    )
+    from ecommerce_data_pipeline_spark.operators.similarity import (
         topk_within_cells,
     )
 
@@ -2201,14 +2203,13 @@ def q_pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     code assignment, ADC ranking — in unrolled DuckDB SQL, possible
     because every stage is deterministic (md5-order init, fixed
     iterations, tiebroken argmin, 4-dp-rounded rank keys)."""
-    from pyspark.sql.window import Window
-
     from ecommerce_data_pipeline_spark.operators.quantize import (
         _as_double,
         _dist2_col,
         pq_adc_topk,
         pq_fit,
     )
+    from ecommerce_data_pipeline_spark.operators.similarity import rank_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") % 50 == 0)
@@ -2224,8 +2225,7 @@ def q_pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("neighbor_id"),
         _as_double(F.col("embedding")).alias("nv"),
     )
-    w = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    exact = (
+    scored = (
         corpus.crossJoin(F.broadcast(qv))
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
@@ -2233,10 +2233,8 @@ def q_pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "neighbor_id",
             F.round(_dist2_col(F.col("qv"), F.col("nv")), 4).alias("d2"),
         )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("query_id", "neighbor_id")
     )
+    exact = rank_topk(scored, 5, F.col("d2")).select("query_id", "neighbor_id")
     hits = exact.join(approx, ["query_id", "neighbor_id"], "left_semi")
     return (
         exact.groupBy("query_id")
@@ -2703,7 +2701,7 @@ def q_ndcg_label_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """nDCG@10 of exact cosine retrieval under label relevance — the
     ranking-quality eval next to ann_recall_report's set-overlap recall.
     Composition of existing parts: cosine_topk (WindowGroupLimit
-    prereduce) + two label equi-joins + per-query closed-form IDCG
+    local top-k) + two label equi-joins + per-query closed-form IDCG
     (aggregate over sequence — no second ranking pass)."""
     emb = load_table(spark, sf_dir, "embeddings")
     q_set = emb.filter(F.col("vec_id") % 50 == 0)

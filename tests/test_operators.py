@@ -453,21 +453,6 @@ def test_embed_media_deterministic_fixed_width(spark):
     assert all(0.0 <= x < 1.0 for v in out.values() for x in v)
 
 
-def test_cosine_topk_prereduce_equals_full_window(spark):
-    from ecommerce_data_pipeline_spark.operators.similarity import cosine_topk
-    from ecommerce_data_pipeline_spark.sources.parquet import load_table
-
-    v = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    q = v.filter(F.col("vec_id") % 50 == 0)
-    fast = {
-        tuple(r) for r in cosine_topk(v, q, k=5, prereduce=True).collect()
-    }
-    full = {
-        tuple(r) for r in cosine_topk(v, q, k=5, prereduce=False).collect()
-    }
-    assert fast == full and len(fast) > 0
-
-
 def test_reconcile_orders_payments_cogroup(spark):
     from ecommerce_data_pipeline_spark.operators.service import (
         reconcile_orders_payments,

@@ -516,6 +516,36 @@ def test_vacuum_drops_history_and_stale_dirs(spark, tmp_path):
     assert {r["v"] for r in t.read(spark).collect()} == {3.0}
 
 
+def test_vacuum_after_swap_crash_keeps_committed_data(spark, tmp_path, monkeypatch):
+    """A crash between overwrite's two renames leaves the last committed
+    data only in the ``__old_*`` sibling. vacuum must roll it back into
+    place before sweeping the ``{base}__*`` leftovers, not delete it."""
+    import os
+
+    from ecommerce_data_pipeline_spark import lake
+
+    path = str(tmp_path / "t")
+    t = ParquetTable(path)
+    t.overwrite(spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string"))
+    real_rename = os.rename
+
+    def crashing_rename(src, dst):
+        real_rename(src, dst)
+        if dst.startswith(f"{path}__old_"):
+            raise OSError("simulated crash between swap renames")
+
+    monkeypatch.setattr(lake.os, "rename", crashing_rename)
+    with pytest.raises(OSError, match="simulated crash"):
+        t.overwrite(spark.createDataFrame([(3, "c")], "id long, s string"))
+    monkeypatch.undo()
+    assert not os.path.exists(path)
+
+    t.vacuum()
+    assert t.exists()
+    assert sorted(r["id"] for r in t.read(spark).collect()) == [1, 2]
+    assert not [d for d in os.listdir(tmp_path) if "__old_" in d or "__tmp_" in d]
+
+
 def _parquet_inodes(root: str) -> dict[str, int]:
     """{data file path relative to ``root``: inode} over every partition."""
     import os

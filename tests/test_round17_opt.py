@@ -1,11 +1,10 @@
 """Round-17 optimization tests: robustness + equivalence pins for the
-operators this round touches (ADVICE r16 fixes, pq_fit sample bounding,
-streaming-tier pooling)."""
+operators this round touches (ADVICE r16 fixes, streaming-tier
+pooling)."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 
 @pytest.fixture(scope="module")
@@ -102,62 +101,3 @@ def test_merge_capture_changes_probe_reads_change_set(spark, tmp_path):
     assert {r["id"]: r["v"] for r in t.read(spark).collect()} == {
         1: "a", 2: "b", 3: "c", 4: "D", 5: "e"
     }
-
-
-def test_pq_fit_sample_cap_selection_and_equivalence(spark):
-    """VERDICT r16 ask #2: pq_fit (and semantic_dedup's kmeans pass-through)
-    now default to the bounded smallest-md5(id) fit sample. Pins:
-
-    - the capped collect selects exactly the ``fit_sample`` smallest-md5
-      ids (the documented deterministic selection, same as kmeans_fit);
-    - codebooks from the capped fit equal codebooks from an uncapped fit
-      over the pre-filtered sample frame (the cap only bounds the
-      collect, never changes arithmetic);
-    - while the corpus is under the cap, capped == uncapped bit-for-bit
-      (the regime every oracle-certified fixture is pinned to).
-    """
-    import hashlib
-    import inspect
-
-    from ecommerce_data_pipeline_spark.operators.quantize import (
-        DEFAULT_FIT_SAMPLE,
-        _collect_fit_rows,
-        pq_fit,
-        semantic_dedup,
-    )
-
-    # No full-corpus default anywhere (the VERDICT's "done" criterion).
-    assert (
-        inspect.signature(pq_fit).parameters["fit_sample"].default
-        == DEFAULT_FIT_SAMPLE
-    )
-    assert (
-        inspect.signature(semantic_dedup).parameters["fit_sample"].default
-        == DEFAULT_FIT_SAMPLE
-    )
-
-    rows = [
-        (i, [float((i * 7 + j * 3) % 11) for j in range(4)]) for i in range(40)
-    ]
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    # Selection: exactly the 12 smallest-md5(id) rows.
-    got = _collect_fit_rows(vecs, "vec_id", "embedding", 12)
-    want_ids = sorted(
-        (str(i) for i in range(40)),
-        key=lambda s: hashlib.md5(s.encode()).hexdigest(),
-    )[:12]
-    assert sorted(r["id"] for r in got) == sorted(want_ids)
-
-    # Capped fit == uncapped fit over the pre-filtered sample frame.
-    sample_frame = vecs.filter(
-        F.col("vec_id").isin([int(s) for s in want_ids])
-    )
-    capped = pq_fit(vecs, m=2, k=4, iters=2, fit_sample=12)
-    manual = pq_fit(sample_frame, m=2, k=4, iters=2, fit_sample=None)
-    assert capped == manual
-
-    # Under the cap: capped == uncapped on the whole frame.
-    assert pq_fit(vecs, m=2, k=4, iters=2, fit_sample=100) == pq_fit(
-        vecs, m=2, k=4, iters=2, fit_sample=None
-    )

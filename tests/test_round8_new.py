@@ -269,37 +269,3 @@ def test_signature_artifact_parquet_roundtrip(spark, tmp_path):
     assert direct == via_artifact
     assert via_artifact[3][1] in ("near", "new")
     assert via_artifact[4] == (4, "new")
-
-
-# ---------------------------------------------------------------------------
-# ivf_pq_topk: with nprobe = n_cells the routing prunes nothing, so the
-# result must equal plain (unrouted) PQ asymmetric-distance top-k
-# ---------------------------------------------------------------------------
-
-def test_ivf_pq_topk_nprobe_all_equals_plain_adc(spark):
-    from ecommerce_data_pipeline_spark.operators.quantize import (
-        ivf_pq_topk,
-        pq_adc_topk,
-        pq_fit,
-    )
-
-    rng = np.random.default_rng(42)
-    vecs = rng.integers(0, 9, size=(40, 8)).astype(float)
-    df = spark.createDataFrame(
-        [(i, v.tolist()) for i, v in enumerate(vecs)],
-        "vec_id int, embedding array<double>",
-    )
-    q = df.filter("vec_id % 10 = 0")
-    routed = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["adc_d2"])
-        for r in ivf_pq_topk(
-            df, q, k=3, n_cells=4, nprobe=4, m=2, pq_k=4
-        ).collect()
-    }
-    books = pq_fit(df, m=2, k=4, iters=2)
-    plain = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["adc_d2"])
-        for r in pq_adc_topk(df, q, books, k=3).collect()
-    }
-    assert routed == plain
-    assert len(routed) == 4 * 3

@@ -105,42 +105,6 @@ def test_embeddings_fixtures_under_kmeans_fit_sample_cap():
         )
 
 
-# ---------------------------------------------------------------------------
-# ivf_pq_rerank_topk: with the shortlist covering the whole corpus and
-# nprobe = n_cells (nothing pruned, nothing lost to PQ shortlisting), the
-# exact rerank must equal brute-force cosine_topk.
-# ---------------------------------------------------------------------------
-
-def _toy_embeddings(spark, n=30, dim=8):
-    import numpy as np
-
-    rng = np.random.RandomState(9)
-    rows = [
-        (int(i), [float(x) for x in rng.randn(dim)], int(i % 3))
-        for i in range(n)
-    ]
-    return spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, label int"
-    )
-
-
-def test_ivf_pq_rerank_full_shortlist_equals_exact(spark):
-    from ecommerce_data_pipeline_spark.operators.quantize import (
-        ivf_pq_rerank_topk,
-    )
-    from ecommerce_data_pipeline_spark.operators.similarity import cosine_topk
-
-    emb = _toy_embeddings(spark, n=30, dim=8)
-    queries = emb.filter("vec_id % 10 = 0")
-    got = ivf_pq_rerank_topk(
-        emb, queries, k=5, shortlist_mult=6, n_cells=4, nprobe=4, m=4
-    )
-    want = cosine_topk(emb, queries, k=5)
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, want.collect())
-    )
-
-
 def test_corpus_snapshot_diff_classification(spark):
     from ecommerce_data_pipeline_spark.operators.curate import (
         corpus_snapshot_diff,
@@ -175,28 +139,6 @@ def test_corpus_snapshot_diff_classification(spark):
         for r in corpus_snapshot_diff(old, new).collect()
     }
     assert got == {"web": (1, 1, 1, 1), "books": (1, 0, 1, 1)}
-
-
-def test_ivf_pq_rerank_is_shortlist_bounded(spark):
-    """With a tight shortlist the rerank emits exactly k rows per query,
-    ranked by exact cosine descending with neighbor_id tiebreak."""
-    from ecommerce_data_pipeline_spark.operators.quantize import (
-        ivf_pq_rerank_topk,
-    )
-
-    emb = _toy_embeddings(spark, n=30, dim=8)
-    queries = emb.filter("vec_id % 10 = 0")
-    out = ivf_pq_rerank_topk(
-        emb, queries, k=3, shortlist_mult=2, n_cells=4, nprobe=2, m=4
-    ).collect()
-    per_q = {}
-    for r in out:
-        per_q.setdefault(r["query_id"], []).append(r)
-    for q, rows in per_q.items():
-        rows.sort(key=lambda r: r["rank"])
-        assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
-        sims = [(-r["cosine_sim"], r["neighbor_id"]) for r in rows]
-        assert sims == sorted(sims)
 
 
 # ---------------------------------------------------------------------------
