@@ -24,7 +24,8 @@ Scale notes (100 TB of documents):
 - MinHash: one corpus scan builds the per-doc shingle-hash set
   (_minhash_profile, materialized via lazy localCheckpoint so banding AND
   verification share it instead of re-scanning); LSH banding explodes to
-  ``n_bands`` rows per doc and joins on (band, bucket) — shuffle volume is
+  ``n_bands`` rows per doc (pinned too, so the band kernel runs once per
+  doc) and joins on (band, bucket) — shuffle volume is
   bands×docs small fixed-width rows, independent of doc size. Candidate
   verification joins the profile back only for bucket-collision pairs
   (tiny). This is the standard shingle→minhash→band→bucket-join plan.
@@ -78,16 +79,32 @@ def _spread(df: DataFrame) -> DataFrame:
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
+def _let(value: Column, body) -> Column:
+    """``body(value)`` with ``value`` evaluated once per row.
+
+    Spark neither codegens higher-order-function lambdas nor eliminates
+    common subexpressions inside them, so an expression a lambda captures
+    is re-evaluated for every array element. Passing it through a
+    one-element ``transform`` binds it to a lambda variable instead."""
+    return F.get(F.transform(F.array(value), body), F.lit(0))
+
+
 def char_shingles(text: Column, k: int = 12) -> Column:
     """Distinct k-character shingles of lower(text) as an array<string>.
 
-    Built with sequence+transform (codegen), not a Python UDF.
+    Built with sequence+transform, not a Python UDF. lower(text) is bound
+    once per row (``_let``): captured by the per-position ``substr``
+    lambda it would lowercase the whole text once per shingle, O(len²)
+    per document.
     """
-    t = F.lower(text)
-    n = F.greatest(F.length(t) - F.lit(k - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(F.sequence(F.lit(1), n), lambda i: F.substr(t, i, F.lit(k)))
-    )
+
+    def shingles(t: Column) -> Column:
+        n = F.greatest(F.length(t) - F.lit(k - 1), F.lit(1))
+        return F.transform(
+            F.sequence(F.lit(1), n), lambda i: F.substr(t, i, F.lit(k))
+        )
+
+    return F.array_distinct(_let(F.lower(text), shingles))
 
 
 # Universal-hash constants for MinHash permutations: h_i(x) = (a_i*x + b_i) mod P
@@ -421,7 +438,13 @@ def minhash_lsh_pairs(
     Output: (doc_id_a, doc_id_b, jaccard).
     """
     profile = _minhash_profile(docs, k, text_col, id_col)
-    banded = _profile_buckets(profile, n_hashes, n_bands)
+    # Pinned like banded_hamming_pairs' signatures: AQE turns the self-join
+    # into a broadcast join, and a broadcast build side cannot reuse the
+    # stream side's exchange, so unpinned the numpy band kernel ran twice
+    # over every document.
+    banded = _profile_buckets(profile, n_hashes, n_bands).localCheckpoint(
+        eager=False
+    )
     lhs = banded.alias("x")
     rhs = banded.alias("y")
     candidates = (
@@ -437,7 +460,7 @@ def minhash_lsh_pairs(
         .distinct()
     )
     # Verify candidates with exact Jaccard over the shingle sets — the same
-    # profile aggregate the buckets came from (ReuseExchange: no rescan).
+    # pinned profile the buckets came from, so no rescan.
     sh = profile.select("doc_id", "shingles")
     va = sh.select(
         F.col("doc_id").alias("doc_id_a"), F.col("shingles").alias("sh_a")
@@ -604,16 +627,30 @@ def word_span_shingles(text: Column, w: int = 8) -> Column:
     Data Makes Language Models Better' §4.1 approximated at fixed span
     width: their suffix-array exact-substring pass flags any 50-token
     repeat; fixed-width spans make the same signal expressible as one
-    explode + count, no suffix array). Codegen expressions only.
+    explode + count, no suffix array). Built-in expressions only; the
+    word array is bound once per row (``_let``), not re-split for every
+    span position.
     """
-    words = F.filter(F.split(F.lower(text), " "), lambda t: t != "")
-    n = F.greatest(F.size(words) - F.lit(w - 1), F.lit(1))
     return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), n),
-            lambda i: F.array_join(F.slice(words, i, w), " "),
+        _let(
+            _words(text),
+            lambda words: F.transform(
+                F.sequence(F.lit(1), _span_count(words, w)),
+                lambda i: F.array_join(F.slice(words, i, w), " "),
+            ),
         )
     )
+
+
+def _words(text: Column) -> Column:
+    """The non-empty space-separated words of lower(text)."""
+    return F.filter(F.split(F.lower(text), " "), lambda t: t != "")
+
+
+def _span_count(words: Column, w: int) -> Column:
+    """Number of w-word span positions: one when the text is shorter than
+    w words."""
+    return F.greatest(F.size(words) - F.lit(w - 1), F.lit(1))
 
 
 def duplicate_span_stats(
@@ -684,12 +721,15 @@ def duplicate_span_runs(
     length, never corpus size. Output: (id, n_spans, max_dup_run,
     max_run_ratio).
     """
-    words = F.filter(F.split(F.lower(F.col(text_col)), " "), lambda t: t != "")
-    n = F.greatest(F.size(words) - F.lit(w - 1), F.lit(1))
-    span_hashes = F.transform(
-        F.sequence(F.lit(1), n),
-        lambda i: F.xxhash64(F.array_join(F.slice(words, i, w), " ")),
+    words = _words(F.col(text_col))
+    span_hashes = _let(
+        words,
+        lambda ws: F.transform(
+            F.sequence(F.lit(1), _span_count(ws, w)),
+            lambda i: F.xxhash64(F.array_join(F.slice(ws, i, w), " ")),
+        ),
     )
+    n = _span_count(words, w)
     base = _spread(docs)
     dup_spans = (
         base.select(
@@ -928,22 +968,17 @@ def cdc_chunk_stats(
         % modulus
         == 0,
     )
-    # Let-bind bpos via a 1-element transform so the per-position md5 scan
-    # evaluates ONCE per row — starts/ends/chunks all reference it, and
-    # Catalyst re-inlines plain expression references (the same measured
-    # blow-up _exploded_shingle_hashes documents).
-    chunks = F.get(
-        F.transform(
-            F.array(bpos),
-            lambda bp: F.zip_with(
-                F.concat(F.array(F.lit(1)), F.transform(bp, lambda p: p + 1)),
-                F.concat(bp, F.array(n)),
-                lambda s, e: F.array_join(
-                    F.slice("ws", s, e - s + 1), " "
-                ),
-            ),
+    # Let-bind bpos so the per-position md5 scan evaluates ONCE per row —
+    # starts/ends/chunks all reference it, and Catalyst re-inlines plain
+    # expression references (the same measured blow-up
+    # _exploded_shingle_hashes documents).
+    chunks = _let(
+        bpos,
+        lambda bp: F.zip_with(
+            F.concat(F.array(F.lit(1)), F.transform(bp, lambda p: p + 1)),
+            F.concat(bp, F.array(n)),
+            lambda s, e: F.array_join(F.slice("ws", s, e - s + 1), " "),
         ),
-        F.lit(0),
     )
     # ch feeds BOTH the frequency build and the join probe; pin it so the
     # chunking map stage runs once (it is the expensive part — one md5 per

@@ -6,8 +6,9 @@ Deterministic Lloyd's k-means built from DataFrame aggregations only:
 - init: the k vectors with the smallest md5(vec_id) — pseudorandom but
   fixed, so runs are reproducible across clusters and sessions (no
   Math.random, no seed-dependent RDD sampling);
-- assign: argmin squared distance over the k broadcast centroid literals —
-  a pure map stage (k × dim multiply-adds per row, whole-stage codegen);
+- assign: argmin squared distance over the k centroids, carried in the
+  plan as one array literal (``_centroid_lit``) — a pure map stage (k × dim
+  multiply-adds per row);
 - update: per-cell component means = one hash aggregation (dim avg
   aggregates), k×dim doubles collected to the driver per iteration — the
   same bounded-scalar pattern as the gold incremental bound.
@@ -26,6 +27,7 @@ primitives rather than copies of them.
 
 from __future__ import annotations
 
+import json
 from functools import reduce
 from operator import add
 
@@ -42,32 +44,28 @@ from ecommerce_data_pipeline_spark.operators.similarity import (
 )
 
 
-def _dbl_sql(x: float) -> str:
-    """A double as a SQL literal token. repr() is the shortest string that
-    round-trips to the same IEEE-754 double, and the SQL parser's
-    Double.parseDouble is correctly rounded, so the parsed literal is
-    bit-identical to the Python float."""
+def _finite(x: float) -> float:
     v = float(x)
     if v != v or v in (float("inf"), float("-inf")):
         raise ValueError(f"non-finite centroid component: {v}")
-    return repr(v) + "D"
+    return v
 
 
 def _centroid_lit(centroids: list[list[float]]) -> Column:
-    """All centroids as ONE array<array<double>> literal. A per-centroid
-    expression tree (k × dim literal nodes) made Catalyst re-derive and
-    codegen-compile a huge plan every Lloyd iteration — at k=8, dim=64
-    that compile dominated the whole fit on small corpora. A single nested
-    literal is one plan node regardless of k×dim.
+    """All centroids as ONE array<array<double>> literal, whatever k×dim.
 
-    Built as one SQL string parsed JVM-side: F.lit on a nested Python list
-    recurses into one py4j round trip per ELEMENT (k×dim socket calls —
-    measured 3.8 s of a 5.9 s ivf_pq_topk plan build at 8×64 + 4×8×16);
-    one expr() call carries the whole literal across the boundary once."""
-    rows = ",".join(
-        "array(" + ",".join(_dbl_sql(x) for x in c) + ")" for c in centroids
-    )
-    return F.expr(f"array({rows})")
+    The matrix crosses py4j as one JSON string: F.lit on a nested Python
+    list makes one py4j round trip per ELEMENT (measured 3.8 s of a 5.9 s
+    ivf_pq_topk plan build at 8×64 + 4×8×16), and an ``array(array(…))``
+    SQL string is k×dim literal nodes that the analyzer walks at every
+    DataFrame step carrying them (~0.17 s of driver CPU per step at 8×64).
+    ``from_json`` of a literal is one leaf; ConstantFolding turns it into a
+    single array literal, so no JSON parse is left in the optimized plan.
+    json.dumps writes each double as its shortest round-trip repr, which
+    the JSON parser reads back correctly rounded, so the literal is
+    bit-identical to the Python floats."""
+    rows = [[_finite(x) for x in c] for c in centroids]
+    return F.from_json(F.lit(json.dumps(rows)), "array<array<double>>")
 
 
 def _dist2_col(v: Column, c: Column) -> Column:
@@ -133,11 +131,12 @@ def _collect_fit_rows(
     ``kmeans_fit``): full corpus when ``fit_sample`` is None, else the
     ``fit_sample`` smallest-md5(id) rows. Selection depends only on the id
     column, never the vector values — which is what lets one collect feed
-    every PQ subspace fit (``pq_fit``)."""
+    every PQ subspace fit (``pq_fit``). Rows with a null vector are left
+    out: they have no coordinates to train on."""
     sel = vectors.select(
         F.col(id_col).cast("string").alias("id"),
         _as_double(F.col(vec_col)).alias("v"),
-    )
+    ).filter(F.col("v").isNotNull())
     if fit_sample is None:
         return sel.collect()
     return (
@@ -180,6 +179,15 @@ def _lloyd(x, k: int, iters: int) -> list[list[float]]:
     return [list(map(float, c)) for c in centroids]
 
 
+def _join_cell(cell: Column) -> Column:
+    """A corpus ``cell`` join key that is never null. On a nullable key the
+    optimizer infers ``isnotnull(cell)`` and pushes it below the
+    projection, so the k×dim distance expression runs twice per row. A
+    null vector gets cell -1, which no probe routes to, so it still
+    matches nothing."""
+    return F.coalesce(cell, F.lit(-1)).alias("cell")
+
+
 def assign_cells(
     vectors: DataFrame,
     centroids: list[list[float]],
@@ -202,7 +210,7 @@ def multiprobe_route(
 ) -> DataFrame:
     """(query_id, q_vec, qn, cell): each query exploded to its ``nprobe``
     nearest centroid cells — the IVF routing stage, one map over the
-    queries against k×dim broadcast centroid literals."""
+    queries against the k×dim centroid literal."""
     qv = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("q_vec")
     )
@@ -240,7 +248,7 @@ def multiprobe_topk(
     corpus = assign_cells(vectors, centroids, id_col, vec_col).select(
         F.col(id_col).alias("neighbor_id"),
         F.col("v").alias("n_vec"),
-        "cell",
+        _join_cell(F.col("cell")),
     )
     probed = multiprobe_route(queries, centroids, nprobe, id_col, vec_col)
     return topk_within_cells(corpus, probed, k)
@@ -413,9 +421,12 @@ def pq_encode(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, pq_codes ARRAY<INT>): each subvector's argmin-centroid code —
-    one map stage, m×k distance expressions in codegen, no shuffle."""
-    codes = _pq_codes(_as_double(F.col(vec_col)), codebooks)
-    return vectors.select(F.col(id_col), codes.alias("pq_codes"))
+    one map stage of m×k distance expressions, no shuffle. The double
+    array is projected first, so the cast runs once per row rather than
+    inside every distance lambda."""
+    return vectors.select(
+        F.col(id_col), _as_double(F.col(vec_col)).alias("__v")
+    ).select(F.col(id_col), _pq_codes(F.col("__v"), codebooks).alias("pq_codes"))
 
 
 def _pq_codes(v: Column, codebooks: list[list[list[float]]]) -> Column:
@@ -504,10 +515,11 @@ def ivf_pq_rerank_topk(
     Output: (query_id, neighbor_id, cosine_sim, rank), rank <= k.
     """
     # The shortlist is pinned with localCheckpoint: it is |Q| × k' rows
-    # (tiny), but its lineage is the whole IVFPQ index build — centroid
-    # literal trees for the coarse + m subspace codebooks — which would
-    # otherwise be embedded (and re-codegen-compiled) inside the broadcast
-    # AND the rescore plan. Measured 9.1 s → ~4 s at sf0.1 from this alone.
+    # (tiny), but its lineage is the whole IVFPQ index build — the coarse
+    # and m subspace codebook literals and every distance expression over
+    # them — which would otherwise be embedded (and re-codegen-compiled)
+    # inside the broadcast AND the rescore plan. Measured 9.1 s → ~4 s at
+    # sf0.1 from this alone.
     short = (
         ivf_pq_topk(
             vectors,
@@ -607,12 +619,15 @@ def ivf_pq_topk(
     books = _pq_books(x, m, pq_k, pq_iters)
     coarse = _lloyd(x, n_cells, coarse_iters)
     # Cell id and PQ codes are both per-row expressions over the same
-    # vector: ONE projection, not two derivations joined back on id.
-    v = _as_double(F.col(vec_col))
+    # vector: ONE projection, not two derivations joined back on id. The
+    # double array is projected before it, so the cast is not re-run
+    # inside each of the distance lambdas.
     corpus = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        _cell_expr(v, coarse).alias("cell"),
-        _pq_codes(v, books).alias("pq_codes"),
+        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("v")
+    ).select(
+        "neighbor_id",
+        _join_cell(_cell_expr(F.col("v"), coarse)),
+        _pq_codes(F.col("v"), books).alias("pq_codes"),
     )
     probed = multiprobe_route(queries, coarse, nprobe, id_col, vec_col)
     scored = (

@@ -15,12 +15,14 @@ from ecommerce_data_pipeline_spark.functions import money_sum
 from ecommerce_data_pipeline_spark.operators import text as tx
 from ecommerce_data_pipeline_spark.operators import windows as win
 from ecommerce_data_pipeline_spark.operators.dedup import (
+    char_shingles,
     exact_dedup,
     kafka_identity_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash,
     simhash_pairs,
+    word_span_shingles,
 )
 from ecommerce_data_pipeline_spark.operators.enrich import enrich_orders
 from ecommerce_data_pipeline_spark.operators.fact import sales_minute_agg
@@ -30,7 +32,7 @@ from ecommerce_data_pipeline_spark.operators.parse import (
     parse_payments,
 )
 from ecommerce_data_pipeline_spark.operators.similarity import cosine_topk
-from tests.conftest import ts
+from tests.conftest import SF_DIR, ts
 
 
 def _order_value(order_id, total, event_time="2024-01-01T10:00:00Z"):
@@ -320,6 +322,61 @@ def test_simhash_identical_docs_and_pairs(spark):
     pairs = {(r["doc_id_a"], r["doc_id_b"]): r["hamming"] for r in simhash_pairs(_docs(spark)).collect()}
     assert pairs[(1, 2)] == 0
     assert (1, 4) not in pairs
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    """The text of every ``lambdafunction(...)`` in a plan string."""
+    bodies = []
+    start = plan.find("lambdafunction(")
+    while start != -1:
+        i = start + len("lambdafunction")
+        depth = 0
+        for j in range(i, len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            if depth == 0:
+                bodies.append(plan[i : j + 1])
+                break
+        start = plan.find("lambdafunction(", start + 1)
+    return bodies
+
+
+def test_shingle_lambdas_do_not_recompute_the_text(spark):
+    # Spark evaluates whatever a lambda captures once per array element:
+    # lower(text) inside the per-position lambda costs O(len^2) per doc.
+    docs = spark.createDataFrame([(1, "Hello World foo bar")], "doc_id long, text string")
+    for shingles in (char_shingles(F.col("text"), 4), word_span_shingles(F.col("text"), 2)):
+        plan = docs.select(shingles)._jdf.queryExecution().optimizedPlan().toString()
+        bodies = _lambda_bodies(plan)
+        assert bodies, plan
+        assert not [b for b in bodies if "lower(" in b or "split(" in b], plan
+
+
+def test_shingles_match_python_reference(spark):
+    texts = ["", "Short", "exactly10!", "A 😀 Grinning 𐐀 Mixed 😀 Text", "  Two  spaces  "]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    k, w = 10, 2
+    rows = docs.select(
+        "text",
+        char_shingles(F.col("text"), k).alias("c"),
+        word_span_shingles(F.col("text"), w).alias("s"),
+    ).collect()
+    for r in rows:
+        t = r["text"].lower()
+        chars = [t[i : i + k] for i in range(max(len(t) - k + 1, 1))]
+        words = [x for x in t.split(" ") if x]
+        spans = [" ".join(words[i : i + w]) for i in range(max(len(words) - w + 1, 1))]
+        assert r["c"] == list(dict.fromkeys(chars)), r["text"]
+        assert r["s"] == list(dict.fromkeys(spans)), r["text"]
+
+
+def test_lsh_band_kernel_runs_once(spark):
+    # Unpinned, the broadcast self-join put two ArrowEvalPython nodes in
+    # the executed plan: the numpy band kernel ran twice over every doc.
+    from ecommerce_data_pipeline_spark.queries import QUERIES
+
+    df = QUERIES["ngram_jaccard_pairs"](spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") <= 1, plan
 
 
 # ---------------------------------------------------------------------------

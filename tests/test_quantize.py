@@ -287,3 +287,62 @@ def test_topk_ranker_limits_before_the_shuffle(spark):
         assert below.startswith("WindowGroupLimit") and below.endswith(
             "Partial"
         ), plan
+
+
+# ---------------------------------------------------------------------------
+# Each per-row value computed once: the centroid literal folds to one
+# constant, and the cell join key carries no inferred filter that would
+# re-run the k×dim distance expression below the projection.
+# ---------------------------------------------------------------------------
+
+def test_centroid_lit_round_trips_bit_exactly(spark):
+    import struct
+
+    import pytest
+
+    from ecommerce_data_pipeline_spark.operators.quantize import _centroid_lit
+
+    def bits(xs):
+        return [struct.pack("<d", x) for x in xs]
+
+    vals = [-0.0, 5e-324, 2.2250738585072014e-308, 0.1, 1 / 3, 1.7976931348623157e308]
+    got = spark.range(1).select(_centroid_lit([vals, vals[::-1]]).alias("c")).first()["c"]
+    assert [bits(r) for r in got] == [bits(vals), bits(vals[::-1])]
+    for bad in (float("nan"), float("inf"), float("-inf")):
+        with pytest.raises(ValueError):
+            _centroid_lit([[0.0, bad]])
+
+
+def test_ann_plans_compute_the_cell_once(spark):
+    from ecommerce_data_pipeline_spark.operators.quantize import pq_encode, pq_fit
+    from ecommerce_data_pipeline_spark.queries import QUERIES
+
+    for name in ("ivf_pq_topk", "kmeans_ivf_topk"):
+        plan = QUERIES[name](spark, SF_DIR)._jdf.queryExecution().optimizedPlan().toString()
+        assert "from_json" not in plan, name
+        filters = [
+            line for line in plan.splitlines()
+            if "Filter" in line and "array_position" in line
+        ]
+        assert not filters, (name, filters)
+    # The embedding is cast once, not inside every distance lambda.
+    emb = load_table(spark, SF_DIR, "embeddings")
+    plan = pq_encode(emb, pq_fit(emb))._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("cast(embedding#") == 1, plan
+
+
+def test_null_vector_row_changes_no_ann_result(spark):
+    emb = load_table(spark, SF_DIR, "embeddings")
+    queries = emb.filter(F.col("vec_id") % 50 == 0)
+    with_null = emb.unionByName(
+        spark.createDataFrame([(10**9, None, 0)], emb.schema)
+    )
+    centroids = kmeans_fit(emb, k=8, iters=3)
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    assert rows(ivf_pq_topk(with_null, queries)) == rows(ivf_pq_topk(emb, queries))
+    assert rows(multiprobe_topk(with_null, queries, centroids, nprobe=3)) == rows(
+        multiprobe_topk(emb, queries, centroids, nprobe=3)
+    )
