@@ -9,6 +9,10 @@ Each query is forced end-to-end with the noop sink (full computation,
 no result serialization to the driver, no disk write). The derived
 Kafka-shaped event streams are cached once per run so the bench
 measures the pipeline, not the fixture generator.
+
+The complete report goes to ``BENCH_FULL_sf<sf>_c<cpus>.json``, one file
+per scale factor and core count. The same file is the baseline the next
+run at that scale and core count compares against.
 """
 
 from __future__ import annotations
@@ -18,11 +22,34 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
-# Queries excluded from the bench (e.g. known-quadratic verifiers that are
-# only meant as small-corpus oracles). Keep empty unless justified.
-SKIP: set[str] = set()
+# Regression rule: a query is flagged when its baseline time is at least
+# MIN_PREV_SEC (below that is timer noise), it ran more than
+# RATIO_THRESHOLD times slower and the excess is more than
+# MIN_ABS_DELTA_SEC (first-touch JIT regularly doubles a 0.1 s query with
+# no plan change) — and all three still hold after one solo re-run.
+RATIO_THRESHOLD = 1.5
+MIN_PREV_SEC = 0.2
+MIN_ABS_DELTA_SEC = 0.3
+
+# One shared session running 200+ queries back-to-back inflates the
+# slowest ones by up to ~2x (GC pressure, shuffle-file cleanup, block-
+# manager churn), so queries at least this slow also get a solo re-run.
+HEAVY_SEC = 2.5
+
+# The sf1 tier: data-parallel heavy queries over the cheap-to-replicate
+# tables. Document-reading queries are left out because the documents'
+# word-shuffle replicas cost more to generate than the tier itself.
+SF1_TIER = [
+    "lineitem_pricing_summary",
+    "orders_column_profile",
+    "part_triangles",
+    "part_reachability_rcte",
+    "events_minute_users",
+    "user_sessions",
+]
 
 
 def force(df) -> None:
@@ -31,482 +58,132 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-# Degraded-host ceiling for publishing a new baseline: a run whose stable-
-# subset median says the host is >25% slower than the committed baseline's
-# is a co-tenant/VM artifact, not a new steady state.
-BASELINE_MAX_STABLE_RATIO = 1.25
+def baseline_name(sf: str, cpus: int) -> str:
+    """The full report's file, and the baseline of the next run at the
+    same scale factor and core count."""
+    return f"BENCH_FULL_sf{sf}_c{cpus}.json"
 
 
-def baseline_publish_path(
-    prev_exists: bool,
-    calibration_trusted: bool,
-    host_ratio_stable: float | None,
-    max_stable_ratio: float = BASELINE_MAX_STABLE_RATIO,
-) -> str:
-    """Which file this run's full per-query map may be written to.
-
-    POLICY (round 14, per the r13 verdict ask #2): every future round's
-    regression gate divides by the previous committed BENCH_FULL.json, so
-    that baseline must stay a steady-state measurement. A run the
-    calibration machinery itself marked suspect — ``calibration_trusted``
-    false (probes disagree with the stable-subset median, or the subset is
-    unavailable) or a stable-median host ratio above ``max_stable_ratio``
-    (the host is >25% slower than the baseline's: co-tenant spike, not a
-    new steady state) — is still fully recorded, but in
-    ``BENCH_FULL_degraded.json``; the committed baseline is left intact.
-    In round 13 this exact call was made by hand (the clean 321.8 s run
-    kept as baseline after a co-tenant spike); now the code makes it.
-    A first run (no baseline yet) always publishes — there is nothing to
-    protect and no ratio to trust.
-    """
-    if not prev_exists:
-        return "BENCH_FULL.json"
-    if not calibration_trusted:
-        return "BENCH_FULL_degraded.json"
-    if host_ratio_stable is not None and host_ratio_stable > max_stable_ratio:
-        return "BENCH_FULL_degraded.json"
-    return "BENCH_FULL.json"
+def is_regression(now: float, prev: float | None) -> bool:
+    return (
+        prev is not None
+        and prev >= MIN_PREV_SEC
+        and now / prev > RATIO_THRESHOLD
+        and now - prev > MIN_ABS_DELTA_SEC
+    )
 
 
-# Host pre-flight (round 15, per the r14 verdict ask #2): two consecutive
-# driver benches ran on degraded hosts (r13 stable-median 1.14, r14 1.28),
-# making the raw cross-round signal routine noise. Before committing to the
-# ~6-minute sweep, sample the 1-min load average and ONE numpy probe against
-# the committed baseline's probes; if the host reads busy, sleep-and-retry a
-# bounded number of times, then run anyway and mark the run degraded-at-start.
-PREFLIGHT_MAX_RATIO = 1.25
-PREFLIGHT_MAX_LOAD = 4.0
-PREFLIGHT_RETRIES = 3
-PREFLIGHT_SLEEP_SEC = 120
-
-
-def baseline_ref_numpy(host_calib: dict) -> float | None:
-    """The pre-flight's reference: the committed baseline's
-    SINGLE-THREAD-pinned matmul probe (``numpy_matmul_1t_sec``).
-
-    Round 15's lesson (VERDICT r15 ask #2): the unpinned multithreaded
-    matmul on a 32-CPU box measures BLAS thread scheduling, not host
-    capacity — its four r15 attempts read 3.3-7.7x "degraded" on a host
-    whose in-run stable-median then read 1.08 parity, and the gate slept
-    6 minutes for nothing. The pinned probe occupies one core, so its
-    runtime tracks per-core clock/steal — genuine capacity — while the
-    load-average check covers co-tenant saturation; together the two
-    signals are orthogonal instead of both scheduling-noise. Baselines
-    that predate the 1t probe return None (gate on load alone) rather
-    than comparing a pinned probe against an unpinned reference."""
-    refs = [
-        host_calib.get("numpy_matmul_1t_sec"),
-        host_calib.get("numpy_matmul_1t_end_sec"),
+def regressions(timings: dict[str, float], baseline: dict[str, float]) -> list[dict]:
+    """Queries that trip the regression rule against the baseline,
+    worst ratio first."""
+    flagged = [
+        {
+            "query": q,
+            "prev_sec": baseline[q],
+            "now_sec": t,
+            "ratio": round(t / baseline[q], 2),
+        }
+        for q, t in sorted(timings.items())
+        if is_regression(t, baseline.get(q))
     ]
-    refs = [x for x in refs if x]
-    # MIN over the baseline run's start/end pinned probes: a momentarily
-    # stolen core inflates a probe, and an inflated reference would
-    # quietly defeat the gate.
-    return round(min(refs), 3) if refs else None
+    return sorted(flagged, key=lambda r: r["ratio"], reverse=True)
 
 
-# The probe body times ONLY the matmul pair inside the subprocess, so
-# interpreter + numpy import startup never pollutes the reading.
-_PROBE_1T_SNIPPET = (
-    "import time, numpy as np\n"
-    "a = np.ones((2048, 2048))\n"
-    "t = time.time()\n"
-    "for _ in range(2):\n"
-    "    a = (a @ a) % 7.0\n"
-    "print(time.time() - t)\n"
-)
+def warm(spark, sf_dir: str) -> float:
+    """Build the set-up every timed query shares and return its seconds.
 
-
-def _numpy_probe() -> float:
-    """One 2048^2 matmul pair with BLAS pinned to ONE thread, run in a
-    subprocess (the thread-count env vars only take effect before the
-    BLAS pool initializes, which in-process numpy has long since done).
-    Raw single-core CPU, no Spark session needed — the pre-flight runs
-    before the JVM starts so a retry-sleep holds no resources."""
-    import subprocess
-
-    env = dict(
-        os.environ,
-        OPENBLAS_NUM_THREADS="1",
-        OMP_NUM_THREADS="1",
-        MKL_NUM_THREADS="1",
-        NUMEXPR_NUM_THREADS="1",
-        VECLIB_MAXIMUM_THREADS="1",
-    )
-    out = subprocess.run(
-        [sys.executable, "-c", _PROBE_1T_SNIPPET],
-        env=env,
-        capture_output=True,
-        text=True,
-        check=True,
-    )
-    return round(float(out.stdout.strip()), 3)
-
-
-def preflight_gate(
-    ref_numpy: float | None,
-    probe_fn=_numpy_probe,
-    load_fn=None,
-    sleep_fn=time.sleep,
-    max_ratio: float = PREFLIGHT_MAX_RATIO,
-    max_load: float = PREFLIGHT_MAX_LOAD,
-    retries: int = PREFLIGHT_RETRIES,
-    sleep_sec: float = PREFLIGHT_SLEEP_SEC,
-) -> dict:
-    """Decide whether the host is steady enough to measure on.
-
-    An attempt reads busy when the 1-min load average exceeds
-    ``max_load`` (another tenant is computing right now — an idle box
-    hosting only this process sits well under 1 before Spark starts) OR
-    the numpy probe runs more than ``max_ratio`` slower than the
-    committed baseline's probes. Busy → sleep ``sleep_sec`` and retry,
-    at most ``retries`` times; after that the sweep runs anyway with
-    ``decision: degraded_at_start`` so the run self-describes (the
-    in-run stable-median machinery and baseline protection still apply —
-    this gate exists to AVOID burning 6 minutes on a host the probes
-    already condemned, not to replace them). ``ref_numpy`` None (first
-    round, no baseline) gates on load alone. All clock/IO dependencies
-    are injectable for unit tests."""
-    if load_fn is None:
-        load_fn = lambda: os.getloadavg()[0]  # noqa: E731
-    attempts: list[dict] = []
-    for i in range(retries + 1):
-        load1 = round(float(load_fn()), 2)
-        probe = probe_fn()
-        ratio = round(probe / ref_numpy, 4) if ref_numpy else None
-        attempts.append(
-            {"load_1min": load1, "numpy_sec": probe, "ratio_vs_baseline": ratio}
-        )
-        busy = load1 > max_load or (ratio is not None and ratio > max_ratio)
-        if not busy:
-            return {
-                "decision": "clean" if ref_numpy else "clean_no_reference",
-                "attempts": attempts,
-                "ref_numpy_sec": ref_numpy,
-                "slept_sec": i * sleep_sec,
-            }
-        if i < retries:
-            sleep_fn(sleep_sec)
-    return {
-        "decision": "degraded_at_start",
-        "attempts": attempts,
-        "ref_numpy_sec": ref_numpy,
-        "slept_sec": retries * sleep_sec,
-    }
-
-
-def main() -> int:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    try:
-        sf_val = float(sf)
-    except ValueError:
-        sf_val = sf
-
-    # Pre-flight BEFORE the JVM starts: the committed baseline's numpy
-    # probes are the reference; the decision (and any retry sleeps) is
-    # logged to stderr so the stdout JSON line stays the driver contract.
-    here_pf = os.path.dirname(os.path.abspath(__file__))
-    ref_numpy = None
-    try:
-        with open(os.path.join(here_pf, "BENCH_FULL.json")) as fh:
-            _bf_calib = (json.load(fh) or {}).get("host_calib") or {}
-        ref_numpy = baseline_ref_numpy(_bf_calib)
-    except (OSError, json.JSONDecodeError):
-        pass
-    preflight = preflight_gate(ref_numpy)
-    print(f"preflight: {json.dumps(preflight)}", file=sys.stderr)
-
-    from ecommerce_data_pipeline_spark.queries import QUERIES
-    from ecommerce_data_pipeline_spark.session import get_spark
+    Per-query numbers should measure the operators under test, not
+    whichever first-touch cost the registry order happens to charge them:
+    the derived event streams and silver frames are written tables in
+    production, the shared near-dup artifacts too, the 128-permutation
+    minhash expression takes seconds to compile on first use, and the
+    first Pandas-UDF query would otherwise fork the Python workers."""
+    from ecommerce_data_pipeline_spark.operators import dedup
+    from ecommerce_data_pipeline_spark.sources import corpus
     from ecommerce_data_pipeline_spark.sources import events as ev
-
-    spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
+    from ecommerce_data_pipeline_spark.sources.parquet import load_table
 
     t0 = time.time()
     ev.enable_stream_cache(True)
-    # Warm the two derived streams (cached) so per-query numbers measure
-    # the operators under test.
     ev.orders_events(spark, sf_dir).count()
     ev.payments_events(spark, sf_dir).count()
-    # Warm the memoized silver frames too (same artifact rationale as the
-    # corpus cache below: silver is a WRITTEN table in production — its
-    # build cost is measured once in pipeline_full_build_sec, not charged
-    # to whichever consumer query the registry order happens to run first;
-    # r9/r10 saw silver_orders_clean read 0.2s steady vs 2.1s first-touch
-    # purely from cohort-rotation run-order shifts).
     ev.silver_orders_frame(spark, sf_dir).count()
     ev.silver_payments_frame(spark, sf_dir).count()
-    # Warm the doc/embedding scans and JIT the heavyweight codegen classes
-    # (the 128-perm minhash expression tree takes ~5s to compile on first
-    # use; steady-state per-query numbers should not charge JVM warmup to
-    # whichever query happens to run first). Setup cost is reported.
-    from ecommerce_data_pipeline_spark.operators import dedup as _dd
-    from ecommerce_data_pipeline_spark.sources.parquet import load_table as _lt
+    dedup.minhash_lsh_pairs(load_table(spark, sf_dir, "documents").limit(64)).count()
+    load_table(spark, sf_dir, "embeddings").limit(1).count()
+    corpus.enable_corpus_cache(True)
+    corpus.dedup_clusters_frame(spark, sf_dir).count()
+    spark.range(256).repartition(32).mapInPandas(lambda it: it, "id long").count()
+    return round(time.time() - t0, 3)
 
-    docs_warm = _lt(spark, sf_dir, "documents").limit(64)
-    _dd.minhash_lsh_pairs(docs_warm).count()
-    _lt(spark, sf_dir, "embeddings").limit(1).count()
-    # Materialize the shared near-dup artifacts (signature pairs + cluster
-    # labels, sources/corpus.py) once — in production these are written
-    # tables every downstream job reads, so their build belongs to setup,
-    # not to whichever consumer query happens to run first. The
-    # minhash_lsh_pairs / dedup_clusters queries bypass this cache and
-    # still measure full operator compute.
-    from ecommerce_data_pipeline_spark.sources import corpus as cx
 
-    cx.enable_corpus_cache(True)
-    cx.dedup_clusters_frame(spark, sf_dir).count()
-    # Warm the Arrow/Python worker pool: the first Pandas-UDF query in the
-    # run otherwise pays the per-executor python worker forks (~1-2s) that
-    # every later UDF query reuses for free.
-    spark.range(256).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
-    setup = time.time() - t0
+def _error(exc: Exception) -> str:
+    first_line = str(exc).split("\n", 1)[0]
+    return f"{type(exc).__name__}: {first_line[:200]}"
 
-    # Host-speed calibration: two fixed workloads whose cost is independent
-    # of the registry, recorded so cross-round per-query comparisons can be
-    # host-normalized (the round-9 VM ran ~35% slower than round 8's
-    # uniformly across even trivial queries; without a calibration constant
-    # that read was only inferable from trivial-query inflation). The numpy
-    # matmul measures raw single-process CPU; the Spark range-agg measures
-    # the JVM codegen path on all cores. To compare round N to round M,
-    # divide per-query times by the ratio of these constants first.
-    import numpy as _np
 
-    t_c = time.time()
-    _a = _np.ones((2048, 2048))
-    for _ in range(2):
-        _a = (_a @ _a) % 7.0
-    calib_numpy = round(time.time() - t_c, 3)
-    t_c = time.time()
-    spark.range(200_000_000).selectExpr("sum(id % 97)").collect()
-    calib_spark = round(time.time() - t_c, 3)
-    host_calib = {
-        "numpy_matmul_2048x2048x2_sec": calib_numpy,
-        "spark_range_200m_agg_sec": calib_spark,
-        # The pre-flight's pinned single-thread probe, re-recorded here so
-        # the NEXT round's pre-flight has a like-for-like reference
-        # (baseline_ref_numpy). MIN over the attempts: a retried gate's
-        # early attempts may have read a transient, and an inflated
-        # reference would quietly defeat the gate.
-        "numpy_matmul_1t_sec": min(
-            a["numpy_sec"] for a in preflight["attempts"]
-        ),
-    }
+def _timed(spark, fn, sf_dir: str) -> float:
+    t = time.time()
+    force(fn(spark, sf_dir))
+    return round(time.time() - t, 3)
 
-    def _calib_end() -> None:
-        # Repeated at end-of-run: host speed can drift WITHIN a run (the
-        # r9 VM swung 245s -> 331s between clean runs an hour apart), so
-        # one start-of-run constant can misrepresent the tail.
-        t_e = time.time()
-        b = _np.ones((2048, 2048))
-        for _ in range(2):
-            b = (b @ b) % 7.0
-        host_calib["numpy_matmul_end_sec"] = round(time.time() - t_e, 3)
-        t_e = time.time()
-        spark.range(200_000_000).selectExpr("sum(id % 97)").collect()
-        host_calib["spark_range_end_sec"] = round(time.time() - t_e, 3)
-        # End-of-run pinned 1t probe: gives baseline_ref_numpy a second
-        # sample to take the MIN over (r16: the three degraded-host runs
-        # showed start probes reading 2-3x the end probes — single-core
-        # steal spikes; one sample would make a brittle reference).
-        host_calib["numpy_matmul_1t_end_sec"] = _numpy_probe()
 
-    # Per-query error isolation: one broken query must never zero out the
-    # round's perf signal (BENCH_r04 crashed wholesale on one
-    # AnalysisException). Failures are reported per-query instead.
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    for name, fn in QUERIES.items():
-        if name in SKIP:
-            continue
-        t = time.time()
+def rerun(spark, sf_dir: str, names, queries, timings: dict[str, float]) -> dict:
+    """Re-run each named query solo, keep the faster time in ``timings``
+    and return both times per query. A failed re-run keeps the first."""
+    both: dict[str, list[float]] = {}
+    for name in names:
         try:
-            force(fn(spark, sf_dir))
-            timings[name] = round(time.time() - t, 3)
-        except Exception as exc:  # noqa: BLE001 - bench must survive anything
-            msg = str(exc).split("\n", 1)[0][:200]
-            errors[name] = f"{type(exc).__name__}: {msg}"
-
-    # Heavy-tier de-noise: one shared session running 149 queries
-    # back-to-back inflates the slowest queries by up to ~2x (GC pressure,
-    # shuffle-file cleanup threads, block-manager churn left by earlier
-    # queries) — r6's in-bench part_triangles read 6.41s vs 4.08s solo warm,
-    # making round-over-round deltas meaningless for exactly the queries
-    # that matter most. Queries above HEAVY_SEC get a second run and report
-    # best-of-2 (the standard warm-measurement policy; both runs are kept
-    # in BENCH_FULL.json under heavy_best_of2 for honesty). The second run
-    # re-executes the full operator — input caches were already warm in
-    # run 1, so the delta is contention, not fixture cost.
-    HEAVY_SEC = 2.5
-    heavy_best_of2: dict[str, list[float]] = {}
-    for name in [n for n, t in timings.items() if t >= HEAVY_SEC]:
-        t = time.time()
-        try:
-            force(QUERIES[name](spark, sf_dir))
-        except Exception:  # noqa: BLE001 - keep run-1 timing on any failure
+            t2 = _timed(spark, queries[name], sf_dir)
+        except Exception:  # noqa: BLE001 - keep the sweep's timing
             continue
-        t2 = round(time.time() - t, 3)
-        heavy_best_of2[name] = [timings[name], t2]
+        both[name] = [timings[name], t2]
         timings[name] = min(timings[name], t2)
+    return both
 
-    # sf1 heavy tier (round 17, VERDICT r16 ask #5): at sf0.1 the whole
-    # headline tier is scheduling-floor-bound — the driver's 8-CPU run
-    # BEAT its 32-CPU run (every r16 scaling ratio 0.71-0.95), so the
-    # sweep above can no longer demonstrate data-path parallelism. This
-    # tier regenerates a deterministic 10x replica of the input corpus
-    # (tools/gen_sf1.py — fixed seed, structure-preserving key strides;
-    # rebuilt into a temp dir EVERY run from $SPARK_GRAFT_SF_DIR, nothing
-    # persisted or cached across runs) and times a small set of
-    # data-parallel heavy queries on it, once each, with the same noop
-    # sink. The sf0.1 contract is untouched: `value`/`queries` stay the
-    # sf0.1 sweep; this block only ADDS the `sf1_heavy` keys. Disable
-    # with SPARK_GRAFT_SF1_TIER=0. Tier selection: heavy data-path
-    # queries over the cheap-to-replicate tables (documents' word-shuffle
-    # replicas are a driver-side python loop costing more than the tier
-    # itself, so document-reading queries are excluded and the corpus is
-    # copied verbatim for incidental loads).
-    sf1_heavy: dict | None = None
-    SF1_TIER = [
-        "lineitem_pricing_summary",
-        "orders_column_profile",
-        "part_triangles",
-        "part_reachability_rcte",
-        "events_minute_users",
-        "user_sessions",
-    ]
-    if os.environ.get("SPARK_GRAFT_SF1_TIER", "1") == "1":
-        import shutil as _sh
-        import tempfile as _tf
 
-        sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
-        sf1_dir = _tf.mkdtemp(prefix="bench_sf1_")
-        try:
-            import gen_sf1 as _gen
+def sf1_tier(spark, sf_dir: str, queries) -> dict:
+    """Time SF1_TIER once each on a deterministic 10x replica of the input
+    (tools/gen_sf1.py), rebuilt into a temp dir every run. At sf0.1 the
+    sweep is scheduling-bound, so it cannot show data-path parallelism."""
+    import shutil
+    import tempfile
 
-            t_g = time.time()
-            _gen.generate_relational(sf1_dir, sf_dir, with_documents=False)
-            gen_sec = round(time.time() - t_g, 3)
-            sf1_timings: dict[str, float] = {}
-            sf1_errors: dict[str, str] = {}
-            for name in SF1_TIER:
-                if name not in QUERIES:
-                    continue
-                spark.sparkContext.setJobDescription(f"sf1:{name}")
-                t = time.time()
-                try:
-                    force(QUERIES[name](spark, sf1_dir))
-                    sf1_timings[name] = round(time.time() - t, 3)
-                except Exception as exc:  # noqa: BLE001
-                    sf1_errors[name] = (
-                        f"{type(exc).__name__}: {str(exc).split(chr(10), 1)[0][:200]}"
-                    )
-            spark.sparkContext.setJobDescription(None)
-            sf1_heavy = {
-                "total": round(sum(sf1_timings.values()), 3),
-                "queries": sf1_timings,
-                "errors": sf1_errors,
-                "gen_sec": gen_sec,
-                "cpus": os.environ.get("SPARK_GRAFT_CPUS"),
-            }
-        except Exception as exc:  # noqa: BLE001 - tier must never sink the bench
-            sf1_heavy = {"error": f"{type(exc).__name__}: {str(exc)[:200]}"}
-        finally:
-            _sh.rmtree(sf1_dir, ignore_errors=True)
+    from tools import gen_sf1
 
-    total = round(sum(timings.values()), 3)
-    _calib_end()
-
-    # Streaming honesty: the streaming query's elapsed time is mostly
-    # micro-batch trigger machinery, not compute — report the split.
-    from ecommerce_data_pipeline_spark.queries import streaming_q
-
-    streaming_phases = dict(streaming_q.STREAMING_PHASES)
-
-    # Per-query delta vs the previous round's recorded bench, when present.
-    prev_queries: dict[str, float] = {}
-    prev_total = None
-    here = os.path.dirname(os.path.abspath(__file__))
-    prev_files = sorted(
-        f for f in os.listdir(here) if f.startswith("BENCH_r") and f.endswith(".json")
-    )
-    if prev_files:
-        try:
-            with open(os.path.join(here, prev_files[-1])) as fh:
-                prev = json.load(fh)
-            parsed = prev.get("parsed") or prev  # driver wraps under "parsed"
-            prev_queries = parsed.get("queries") or {}
-            prev_total = parsed.get("value")
-            if not prev_queries and isinstance(prev.get("tail"), str):
-                # The driver records only a truncated stdout tail when it
-                # cannot parse full JSON — salvage per-query pairs from it.
-                import re
-
-                prev_queries = {
-                    m.group(1): float(m.group(2))
-                    for m in re.finditer(
-                        r'"([a-z0-9_]+)": ([0-9]+\.[0-9]+)', prev["tail"]
-                    )
-                    if m.group(1) in timings
-                }
-        except (json.JSONDecodeError, OSError, AttributeError):
-            pass
-    delta_vs_prev = {
-        q: round(timings[q] - prev_queries[q], 3)
-        for q in timings
-        if q in prev_queries
-    }
-
-    # Host-calibrated totals (round 10+): raw round-over-round totals were
-    # dominated by VM speed (r9 ran on a uniformly ~1.37x slower host than
-    # r8 — verified via per-query ratios on untouched trivial queries).
-    # Divide this run's total by the host-speed ratio against (a) the
-    # pinned r9 anchor (first round with calib probes) and (b) the previous
-    # round's recorded probes, so regressions are judged on work, not VM.
-    R9_CALIB_ANCHOR = {"numpy_sec": 1.078, "spark_sec": 0.394, "round": 9}
-
-    def _calib_avg(hc: dict) -> tuple[float | None, float | None]:
-        ns = [hc.get("numpy_matmul_2048x2048x2_sec"), hc.get("numpy_matmul_end_sec")]
-        ss = [hc.get("spark_range_200m_agg_sec"), hc.get("spark_range_end_sec")]
-        ns = [x for x in ns if x]
-        ss = [x for x in ss if x]
-        return (
-            sum(ns) / len(ns) if ns else None,
-            sum(ss) / len(ss) if ss else None,
-        )
-
-    def _host_ratio(cur: dict, ref_numpy: float | None, ref_spark: float | None):
-        cn, cs = _calib_avg(cur)
-        ratios = []
-        if cn and ref_numpy:
-            ratios.append(cn / ref_numpy)
-        if cs and ref_spark:
-            ratios.append(cs / ref_spark)
-        return round(sum(ratios) / len(ratios), 4) if ratios else None
-
-    ratio_r9 = _host_ratio(
-        host_calib, R9_CALIB_ANCHOR["numpy_sec"], R9_CALIB_ANCHOR["spark_sec"]
-    )
-    prev_calib = {}
+    sf1_dir = tempfile.mkdtemp(prefix="bench_sf1_")
     try:
-        prev_calib = (prev.get("parsed") or prev).get("host_calib") or {}
-    except (NameError, AttributeError):
-        pass
-    pn, ps = _calib_avg(prev_calib) if prev_calib else (None, None)
-    ratio_vs_prev = _host_ratio(host_calib, pn, ps)
-    # total_calibrated_* are computed AFTER the regression recheck below
-    # (ADVICE r11): the recheck lowers flagged timings and `total` is
-    # recomputed from them, so calibrating the pre-recheck sum published
-    # totals inconsistent with the reported total in the same summary.
+        t_g = time.time()
+        gen_sf1.generate_relational(sf1_dir, sf_dir, with_documents=False)
+        gen_sec = round(time.time() - t_g, 3)
+        timings: dict[str, float] = {}
+        errors: dict[str, str] = {}
+        for name in [n for n in SF1_TIER if n in queries]:
+            spark.sparkContext.setJobDescription(f"sf1:{name}")
+            try:
+                timings[name] = _timed(spark, queries[name], sf1_dir)
+            except Exception as exc:  # noqa: BLE001
+                errors[name] = _error(exc)
+        spark.sparkContext.setJobDescription(None)
+        return {
+            "total": round(sum(timings.values()), 3),
+            "queries": timings,
+            "errors": errors,
+            "gen_sec": gen_sec,
+            "cpus": os.environ.get("SPARK_GRAFT_CPUS"),
+        }
+    except Exception as exc:  # noqa: BLE001 - the tier must never sink the bench
+        return {"error": _error(exc)}
+    finally:
+        shutil.rmtree(sf1_dir, ignore_errors=True)
 
-    # Like-for-like numbers against BASELINE.md's dbt anchor: the anchor
-    # measures an incremental gold MERGE (0.551s) / full build incl. tests
-    # (0.994s) on a pre-built lakehouse at demo volume. Build the lakehouse
-    # once, then time (a) the full batch medallion, (b) a pure incremental
-    # gold MERGE + quality suite (the dbt-build twin).
+
+def pipeline_anchor(spark, sf_dir: str) -> tuple[float, list[float]]:
+    """Like-for-like numbers against BASELINE.md's dbt anchor (an
+    incremental gold MERGE, 0.551 s): build a lakehouse with the full batch
+    medallion, then run the incremental gold MERGE + quality gate twice.
+    The second run re-MERGEs the same window, identical work idempotent by
+    key. Returns (full build sec, [gold run sec, gold run sec])."""
     import shutil
     import tempfile
 
@@ -517,8 +194,6 @@ def main() -> int:
     )
 
     root = tempfile.mkdtemp(prefix="bench_lake_")
-    full_build = gold_incremental = None
-    gold_runs: list[float] = []
     try:
         lake = pl.Lakehouse(root, partition_silver=False)
         t0 = time.time()
@@ -526,290 +201,126 @@ def main() -> int:
             spark, lake, orders_events(spark, sf_dir), payments_events(spark, sf_dir)
         )
         full_build = round(time.time() - t0, 3)
-        # Best-of-2 for the headline baseline metric (same warm-measurement
-        # policy as heavy_best_of2): this block runs at the contended tail
-        # of a 200-query session, where single measurements of the gold
-        # MERGE swung 1.4-1.8s run-to-run on identical code. Both runs are
-        # real incremental MERGEs against the built lakehouse (the second
-        # re-MERGEs the same 2h window — identical work, idempotent by key).
         gold_runs = []
         for _ in range(2):
             t0 = time.time()
-            pl.run_gold(spark, lake)  # incremental MERGE + quality gate
+            pl.run_gold(spark, lake)
             gold_runs.append(round(time.time() - t0, 3))
-        gold_incremental = min(gold_runs)
-    except Exception as exc:  # noqa: BLE001
-        errors["__pipeline__"] = f"{type(exc).__name__}: {str(exc)[:200]}"
+        return full_build, gold_runs
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
-    # Self-flagging regression gate (round 11, per the r10 verdict ask):
-    # compare each query's HOST-CALIBRATED time against the previous
-    # committed BENCH_FULL.json (read before this run overwrites it) and
-    # emit a `regressions` list instead of relying on judge diffing.
-    # Floors: previous time >= 0.2s (sub-0.2s is timer noise) and an
-    # absolute calibrated delta > 0.3s (first-touch JIT on trivial queries
-    # regularly doubles a 0.1s number without any plan change).
-    regressions: list[dict] = []
-    prev_full: dict = {}
+
+def main() -> int:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     try:
-        with open(os.path.join(here, "BENCH_FULL.json")) as fh:
-            prev_full = json.load(fh)
+        sf_val = float(sf)
+    except ValueError:
+        sf_val = sf
+
+    from ecommerce_data_pipeline_spark.queries import QUERIES
+    from ecommerce_data_pipeline_spark.queries import streaming_q
+    from ecommerce_data_pipeline_spark.session import default_parallelism, get_spark
+
+    cpus = default_parallelism()
+    report_name = baseline_name(sf, cpus)
+    try:
+        with open(os.path.join(HERE, report_name)) as fh:
+            baseline = json.load(fh).get("queries") or {}
     except (OSError, json.JSONDecodeError):
-        pass
-    pf_queries = prev_full.get("queries") or {}
-    pf_n, pf_s = _calib_avg(prev_full.get("host_calib") or {})
-    ratio_vs_full = _host_ratio(host_calib, pf_n, pf_s) or 1.0
+        baseline = {}
 
-    # THE calibration basis (round 13, per the r12 verdict): in r12 the
-    # three host probes disagreed ~2x with each other (numpy said the host
-    # got FASTER vs r9, spark-range read ~parity, full-run pairs read
-    # 0.66x slower) and the 0.6636 figure manufactured the round's only
-    # regression flag (embedding_near_dup_pairs "2.27x calibrated" vs
-    # 1.51x raw; solo steady-state 0.79-0.97s — noise). Single-number
-    # probes measure single-core burst or one trivial range-agg, not the
-    # mixed shuffle/scan workload. The basis is now the MEDIAN per-query
-    # raw ratio over a PINNED subset of long-lived, untouched, mid-cost
-    # (0.6-2.4s) queries spanning every workload class (joins, aggs,
-    # windows, text, embeddings, streaming-batch twins) — robust to a few
-    # first-touch outliers, measures exactly "how much slower does the
-    # same work run on this host", and is what both the regression gate's
-    # calibrated leg and total_calibrated_vs_prev divide by. The legacy
-    # probes are kept ONLY as a cross-check: if they disagree with the
-    # median basis by >25%, calibrated fields are marked untrusted
-    # (calibration_trusted=false) rather than silently published.
-    STABLE_CALIB_SUBSET = [
-        "event_funnel", "pmi_top_pairs", "zipf_slope",
-        "lineitem_pricing_summary", "cart_totals", "inventory_counters",
-        "char_entropy_quality", "top_customers_per_nation",
-        "promo_revenue_share", "revenue_trend_by_type",
-        "payment_reconciliation", "minute_anomalies", "paid_orders_recent",
-        "knn_label_accuracy", "multitouch_attribution", "scd2_point_in_time",
-        "cosine_topk", "value_drift_psi", "recent_sales_top10",
-        "unigram_logprob_score", "part_profit_by_nation_year",
-        "shipping_priority_top10", "nation_market_share",
-        "local_supplier_revenue", "user_activity_similarity", "bm25_search",
-        "tfidf_top_terms", "order_payments_enriched", "fct_sales_minute",
-        "order_status_current", "nation_trade_flows", "supplier_diversity",
-    ]
-    _stable_ratios = sorted(
-        timings[q] / pf_queries[q]
-        for q in STABLE_CALIB_SUBSET
-        if q in timings and pf_queries.get(q, 0) >= 0.25
-    )
-    host_ratio_stable = (
-        round(
-            (
-                _stable_ratios[len(_stable_ratios) // 2]
-                if len(_stable_ratios) % 2
-                else (
-                    _stable_ratios[len(_stable_ratios) // 2 - 1]
-                    + _stable_ratios[len(_stable_ratios) // 2]
-                )
-                / 2.0
-            ),
-            4,
-        )
-        if len(_stable_ratios) >= 10
-        else None
-    )
-    ratio_for_gate = host_ratio_stable or ratio_vs_full
-    calibration_trusted = True
-    calibration_note = "median per-query ratio over pinned stable subset"
-    if host_ratio_stable is None:
-        calibration_trusted = False
-        calibration_note = (
-            "stable subset unavailable (<10 comparable queries); fell back "
-            "to probe-based ratio — treat calibrated fields as untrusted"
-        )
-    elif ratio_vs_full and not (
-        0.75 <= host_ratio_stable / ratio_vs_full <= 1.33
-    ):
-        calibration_trusted = False
-        calibration_note = (
-            f"probes disagree with the stable-subset median "
-            f"(probe {ratio_vs_full} vs median {host_ratio_stable}): "
-            "calibrated fields untrusted this run; trust raw + solo "
-            "re-measures instead"
-        )
+    spark = get_spark("bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    setup = warm(spark, sf_dir)
 
-    def _is_regression(q: str, t: float) -> bool:
-        # A genuine plan regression trips BOTH ratios: raw (work got
-        # slower on this host) AND calibrated (slower after removing the
-        # host factor). Either alone is foolable by probe/workload
-        # mismatch: the r11 run's probes read a host 28% faster while the
-        # multi-core shuffle workload ran at the same speed (median raw
-        # ratio 0.963!), so calibrated-only flagged 22 untouched queries;
-        # conversely raw-only would flag everything on a genuinely slower
-        # VM. The probes measure single-core burst + a trivial range-agg
-        # — a host proxy, not a workload twin — hence the AND-gate.
-        pt = pf_queries.get(q)
-        if not pt or pt < 0.2:
-            return False
-        raw_trip = t / pt > 1.5 and t - pt > 0.3
-        if not calibration_trusted:
-            # The code itself declared the median suspect — ANDing with a
-            # distrusted ratio could silently SUPPRESS a real regression
-            # (a wrong-high median halves every calibrated time). Fall
-            # back to raw-only: over-flags, and the solo re-measure
-            # recheck below de-noises exactly that direction.
-            return raw_trip
-        calib_t = t / ratio_for_gate
-        calib_trip = calib_t / pt > 1.5 and calib_t - pt > 0.3
-        return raw_trip and calib_trip
-
-    # First-touch de-noise for the gate: whichever query the rotated run
-    # order hits first pays one-time JIT/codegen compile (r9-r11 all saw
-    # sub-2s queries double from this with zero code change — e.g.
-    # order_count_distribution solo-steady 0.7s vs 1.55s in-bench). A
-    # suspected regression is therefore RE-MEASURED once, solo-warm, and
-    # only flagged if the min still trips the threshold; both runs are
-    # recorded under regression_recheck for honesty.
-    regression_recheck: dict[str, list[float]] = {}
-    for q in sorted(timings):
-        if not _is_regression(q, timings[q]):
-            continue
-        t = time.time()
+    # Per-query error isolation: one broken query must never zero out the
+    # run's signal. Failures are reported per query instead.
+    timings: dict[str, float] = {}
+    errors: dict[str, str] = {}
+    for name, fn in QUERIES.items():
         try:
-            force(QUERIES[q](spark, sf_dir))
-        except Exception:  # noqa: BLE001 - keep run-1 timing on any failure
-            continue
-        t2 = round(time.time() - t, 3)
-        regression_recheck[q] = [timings[q], t2]
-        timings[q] = min(timings[q], t2)
-    total = round(sum(timings.values()), 3)
-    total_calibrated_r9host = round(total / ratio_r9, 3) if ratio_r9 else None
-    # Calibrated-vs-prev now divides by the stable-subset median (the one
-    # documented basis); the probe-based ratio is published alongside only
-    # as the cross-check input.
-    total_calibrated_vs_prev = (
-        round(total / ratio_for_gate, 3) if ratio_for_gate else None
-    )
-    for q, t in sorted(timings.items()):
-        if _is_regression(q, t):
-            pt = pf_queries[q]
-            calib_t = t / ratio_for_gate
-            regressions.append(
-                {
-                    "query": q,
-                    "prev_sec": pt,
-                    "now_sec_raw": t,
-                    "now_sec_calibrated": round(calib_t, 3),
-                    "raw_ratio": round(t / pt, 2),
-                    "ratio": round(calib_t / pt, 2),
-                }
-            )
-    regressions.sort(key=lambda r: r["ratio"], reverse=True)
+            timings[name] = _timed(spark, fn, sf_dir)
+        except Exception as exc:  # noqa: BLE001 - bench must survive anything
+            errors[name] = _error(exc)
 
-    # The driver keeps only a bounded stdout tail, so the primary line must
-    # stay compact (r02/r03 benches were lost to tail truncation of the full
-    # per-query map). Primary line: totals + the 10 slowest queries + errors.
-    # The complete per-query map goes to BENCH_FULL.json, committed to the
-    # repo for round-over-round deltas.
-    slowest = dict(
-        sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:10]
+    # One solo re-run for the heavy tier and for every suspected regression
+    # (whichever query runs first pays one-time codegen compile).
+    suspects = sorted(
+        q
+        for q, t in timings.items()
+        if t >= HEAVY_SEC or is_regression(t, baseline.get(q))
     )
-    full_report = {
+    reruns = rerun(spark, sf_dir, suspects, QUERIES, timings)
+    flagged = regressions(timings, baseline)
+    total = round(sum(timings.values()), 3)
+
+    sf1_heavy = None
+    if os.environ.get("SPARK_GRAFT_SF1_TIER", "1") == "1":
+        sf1_heavy = sf1_tier(spark, sf_dir, QUERIES)
+
+    # The streaming query's elapsed time is mostly micro-batch trigger
+    # machinery, not compute: report the split.
+    streaming_phases = dict(streaming_q.STREAMING_PHASES)
+
+    full_build, gold_runs = None, []
+    try:
+        full_build, gold_runs = pipeline_anchor(spark, sf_dir)
+    except Exception as exc:  # noqa: BLE001
+        errors["__pipeline__"] = _error(exc)
+    # The dbt anchor is single-shot, so the first run is surfaced too; the
+    # best of two is the warm steady state.
+    gold_incremental = min(gold_runs) if gold_runs else None
+    gold_first = gold_runs[0] if gold_runs else None
+
+    summary = {
         "metric": "headline_queries_total",
         "value": total,
         "unit": "sec",
-        "queries": timings,
-        "errors": errors,
         "sf": sf_val,
-        "setup_sec": round(setup, 3),
+        "cpus": cpus,
         "n_queries": len(timings),
+        "n_errors": len(errors),
+        "errors": errors,
+        "setup_sec": setup,
         "pipeline_full_build_sec": full_build,
         "gold_incremental_merge_sec": gold_incremental,
-        # First run surfaced separately: rounds <=9 and the dbt anchor are
-        # single-shot measurements, so anchor/history comparisons should
-        # use the first-run value; best-of-2 is the warm steady-state.
-        "gold_incremental_first_run_sec": gold_runs[0] if gold_runs else None,
-        "gold_incremental_runs": gold_runs if gold_incremental else None,
+        "gold_incremental_first_run_sec": gold_first,
         "streaming_fct_phases": streaming_phases,
         "sf1_heavy": sf1_heavy,
-        "heavy_best_of2": heavy_best_of2,
-        "regressions": regressions,
-        "regression_recheck": regression_recheck,
-        "regression_gate": {
-            "basis": "raw AND calibrated ratio vs previous BENCH_FULL.json "
-            "(both must trip), calibrated leg divides by the median "
-            "per-query ratio over the pinned stable subset (r13 fix: the "
-            "r12 probes disagreed ~2x and manufactured a false flag); "
-            "suspected regressions re-measured once (min of 2)",
-            "ratio_threshold": 1.5,
-            "min_prev_sec": 0.2,
-            "min_abs_delta_sec": 0.3,
-            "host_ratio_vs_prev_full": ratio_vs_full,
-            "host_ratio_stable_median": host_ratio_stable,
-            "stable_subset_n": len(_stable_ratios),
-            "calibration_trusted": calibration_trusted,
-            "calibration_note": calibration_note,
-        },
-        "preflight": preflight,
-        "host_calib": host_calib,
-        "calib_anchor_r9": R9_CALIB_ANCHOR,
-        "host_ratio_vs_r9": ratio_r9,
-        "total_calibrated_r9host": total_calibrated_r9host,
-        "host_ratio_vs_prev": ratio_vs_prev,
-        "total_calibrated_vs_prev": total_calibrated_vs_prev,
-        "prev_bench": prev_files[-1] if prev_files else None,
-        "prev_total": prev_total,
-        "delta_vs_prev": delta_vs_prev,
     }
-    # Baseline protection (r13 verdict ask #2): a degraded-host run must
-    # not overwrite the steady-state baseline the regression gate divides
-    # by — it is preserved in full under a side file instead.
-    publish_name = baseline_publish_path(
-        bool(prev_full), calibration_trusted, host_ratio_stable
-    )
-    full_report["baseline_protection"] = {
-        "published_to": publish_name,
-        "max_stable_ratio": BASELINE_MAX_STABLE_RATIO,
-        "reason": (
-            "steady-state run; baseline updated"
-            if publish_name == "BENCH_FULL.json"
-            else "degraded host (calibration untrusted or stable-median "
-            f"ratio > {BASELINE_MAX_STABLE_RATIO}); prior BENCH_FULL.json "
-            "kept as the regression baseline"
-        ),
+    full_report = {
+        **summary,
+        "queries": timings,
+        "gold_incremental_runs": gold_runs,
+        "reruns": reruns,
+        "regressions": flagged,
+        "regression_gate": {
+            "baseline": report_name if baseline else None,
+            "ratio_threshold": RATIO_THRESHOLD,
+            "min_prev_sec": MIN_PREV_SEC,
+            "min_abs_delta_sec": MIN_ABS_DELTA_SEC,
+        },
+        "delta_vs_baseline": {
+            q: round(t - baseline[q], 3) for q, t in timings.items() if q in baseline
+        },
     }
     try:
-        with open(os.path.join(here, publish_name), "w") as fh:
+        with open(os.path.join(HERE, report_name), "w") as fh:
             json.dump(full_report, fh, indent=1, sort_keys=True)
     except OSError:
         pass
+    # The stdout tail a caller keeps is bounded, so the line carries the
+    # ten slowest queries; the complete map is in the report file.
+    slowest = dict(sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:10])
     print(
         json.dumps(
             {
-                "metric": "headline_queries_total",
-                "value": total,
-                "unit": "sec",
+                **summary,
                 "queries": slowest,
-                "sf": sf_val,
-                "n_queries": len(timings),
-                "n_errors": len(errors),
-                "errors": errors,
-                "setup_sec": round(setup, 3),
-                "pipeline_full_build_sec": full_build,
-                "gold_incremental_merge_sec": gold_incremental,
-                "gold_incremental_first_run_sec": (
-                    gold_runs[0] if gold_runs else None
-                ),
-                "regressions": regressions[:10],
-                "streaming_fct_phases": streaming_phases,
-                "sf1_heavy": sf1_heavy,
-                "preflight": {
-                    "decision": preflight["decision"],
-                    "n_attempts": len(preflight["attempts"]),
-                    "slept_sec": preflight["slept_sec"],
-                },
-                "host_calib": host_calib,
-                "host_ratio_vs_r9": ratio_r9,
-                "total_calibrated_r9host": total_calibrated_r9host,
-                "host_ratio_stable_median": host_ratio_stable,
-                "total_calibrated_vs_prev": total_calibrated_vs_prev,
-                "calibration_trusted": calibration_trusted,
-                "queries_full": publish_name,
+                "regressions": flagged[:10],
+                "queries_full": report_name,
             }
         )
     )

@@ -210,8 +210,10 @@ def multiprobe_route(
 ) -> DataFrame:
     """(query_id, q_vec, qn, cell): each query exploded to its ``nprobe``
     nearest centroid cells — the IVF routing stage, one map over the
-    queries against the k×dim centroid literal."""
-    qv = queries.select(
+    queries against the k×dim centroid literal. A query with a null vector
+    is dropped: its k distances would all be null, and the sort would
+    route it to cells 0..nprobe-1 with null scores."""
+    qv = queries.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("q_vec")
     )
     dists = F.transform(

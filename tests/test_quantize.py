@@ -334,15 +334,18 @@ def test_ann_plans_compute_the_cell_once(spark):
 def test_null_vector_row_changes_no_ann_result(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    with_null = emb.unionByName(
-        spark.createDataFrame([(10**9, None, 0)], emb.schema)
-    )
+    null_row = spark.createDataFrame([(10**9, None, 0)], emb.schema)
+    with_null = emb.unionByName(null_row)
+    # A null query vector is dropped, not routed to cells with null scores.
+    queries_with_null = queries.unionByName(null_row)
     centroids = kmeans_fit(emb, k=8, iters=3)
 
     def rows(df):
         return sorted(map(tuple, df.collect()))
 
-    assert rows(ivf_pq_topk(with_null, queries)) == rows(ivf_pq_topk(emb, queries))
-    assert rows(multiprobe_topk(with_null, queries, centroids, nprobe=3)) == rows(
-        multiprobe_topk(emb, queries, centroids, nprobe=3)
+    assert rows(ivf_pq_topk(with_null, queries_with_null)) == rows(
+        ivf_pq_topk(emb, queries)
     )
+    assert rows(
+        multiprobe_topk(with_null, queries_with_null, centroids, nprobe=3)
+    ) == rows(multiprobe_topk(emb, queries, centroids, nprobe=3))

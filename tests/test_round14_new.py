@@ -1,50 +1,6 @@
-"""Round-14 additions: bench baseline protection (VERDICT r13 ask #2)
-and the round's new certified queries' kernels."""
+"""Round-14 additions: the round's new certified queries' kernels."""
 
 from __future__ import annotations
-
-import bench
-
-
-def test_degraded_host_never_overwrites_baseline():
-    """A run whose calibration is untrusted, or whose stable-median host
-    ratio exceeds the 1.25 ceiling, is written to the side file — the
-    committed BENCH_FULL.json stays the regression-gate denominator
-    (round 13 made this call by hand; now it is policy)."""
-    # Steady state: publish as the baseline.
-    assert (
-        bench.baseline_publish_path(True, True, 1.0008) == "BENCH_FULL.json"
-    )
-    assert (
-        bench.baseline_publish_path(True, True, 1.25) == "BENCH_FULL.json"
-    )
-    # Calibration machinery itself distrusts the run.
-    assert (
-        bench.baseline_publish_path(True, False, 1.0)
-        == "BENCH_FULL_degraded.json"
-    )
-    # Trusted but the host is >25% slower than the baseline's (the r13
-    # driver host read 1.1422 — kept; a 1.5416-class spike is refused).
-    assert (
-        bench.baseline_publish_path(True, True, 1.5416)
-        == "BENCH_FULL_degraded.json"
-    )
-    # No stable median at all only publishes when trusted is ALSO true —
-    # which the caller never produces (no median => untrusted), but the
-    # pure function must still be safe on that input.
-    assert bench.baseline_publish_path(True, True, None) == "BENCH_FULL.json"
-    assert (
-        bench.baseline_publish_path(True, False, None)
-        == "BENCH_FULL_degraded.json"
-    )
-
-
-def test_first_run_always_publishes_baseline():
-    """With no prior BENCH_FULL.json there is nothing to protect: the
-    first run creates the baseline even when its own calibration is
-    shaky (there is no previous run to calibrate against anyway)."""
-    assert bench.baseline_publish_path(False, False, None) == "BENCH_FULL.json"
-    assert bench.baseline_publish_path(False, True, 2.0) == "BENCH_FULL.json"
 
 
 def test_update_file_stats_pin_fresh_keeps_equality(spark, tmp_path):

@@ -13,73 +13,6 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def test_preflight_gate_decisions():
-    """bench.py host pre-flight (VERDICT r14 ask #2): busy hosts get a
-    bounded sleep-and-retry BEFORE the 6-minute sweep; an exhausted gate
-    still runs but self-describes as degraded-at-start. All IO injected."""
-    import bench
-
-    sleeps: list[float] = []
-
-    def sleep(s):
-        sleeps.append(s)
-
-    # Clean on the first attempt: no sleeping.
-    r = bench.preflight_gate(
-        3.0, probe_fn=lambda: 3.1, load_fn=lambda: 0.2, sleep_fn=sleep
-    )
-    assert r["decision"] == "clean" and sleeps == [] and r["slept_sec"] == 0
-    assert r["attempts"][0]["ratio_vs_baseline"] == pytest.approx(
-        3.1 / 3.0, abs=1e-3
-    )
-    # Busy twice (probe 2.3x the baseline), then the host settles.
-    probes = iter([7.0, 7.0, 3.05])
-    r = bench.preflight_gate(
-        3.0, probe_fn=lambda: next(probes), load_fn=lambda: 0.2,
-        sleep_fn=sleep, sleep_sec=120,
-    )
-    assert r["decision"] == "clean" and sleeps == [120, 120]
-    assert len(r["attempts"]) == 3 and r["slept_sec"] == 240
-    # Load alone trips the gate even with a healthy probe ratio.
-    sleeps.clear()
-    r = bench.preflight_gate(
-        3.0, probe_fn=lambda: 3.0, load_fn=lambda: 9.0,
-        sleep_fn=sleep, retries=2, sleep_sec=60,
-    )
-    assert r["decision"] == "degraded_at_start" and sleeps == [60, 60]
-    assert len(r["attempts"]) == 3 and r["slept_sec"] == 120
-    # No baseline yet: gate on load alone, decision self-describes.
-    r = bench.preflight_gate(
-        None, probe_fn=lambda: 99.0, load_fn=lambda: 0.1, sleep_fn=sleep
-    )
-    assert r["decision"] == "clean_no_reference"
-    assert r["attempts"][0]["ratio_vs_baseline"] is None
-
-
-def test_preflight_reference_is_pinned_single_thread_probe():
-    """The gate's reference is the baseline's SINGLE-THREAD-pinned probe
-    (VERDICT r15 ask #2): the unpinned multithreaded keys are never a
-    reference for the pinned probe — a baseline that predates the 1t
-    probe returns None, so the gate falls back to load-only instead of
-    comparing across probe shapes."""
-    import bench
-
-    assert bench.baseline_ref_numpy({"numpy_matmul_1t_sec": 0.82}) == 0.82
-    # Min over the baseline's start/end pinned probes: a stolen-core
-    # spike in either must not inflate the reference.
-    assert bench.baseline_ref_numpy(
-        {"numpy_matmul_1t_sec": 4.796, "numpy_matmul_1t_end_sec": 1.21}
-    ) == 1.21
-    # Old-shape baselines (multithreaded keys only) yield no reference.
-    assert bench.baseline_ref_numpy(
-        {
-            "numpy_matmul_2048x2048x2_sec": 1.671,
-            "numpy_matmul_end_sec": 3.5,
-        }
-    ) is None
-    assert bench.baseline_ref_numpy({}) is None
-
-
 def _month_table(spark, tmp_path):
     """Two-month partitioned table (same fixture shape as round 14)."""
     path = str(tmp_path / "tbl")

@@ -1,9 +1,8 @@
-"""Round-16 additions: the pinned single-thread pre-flight probe
-(VERDICT r15 ask #2), the generalized versioned-manifest maintenance
-commit for compaction/Z-order (ask #3), and the four ADVICE r15 fixes
-(urlsplit-free _canon, skipping_scan survivor dedup, empty-index-dir
-probe, vacuum writer-gap floor — the floor's test lives with the r15
-vacuum test it extends)."""
+"""Round-16 additions: the generalized versioned-manifest maintenance
+commit for compaction/Z-order (VERDICT r15 ask #3), and the four ADVICE
+r15 fixes (urlsplit-free _canon, skipping_scan survivor dedup,
+empty-index-dir probe, vacuum writer-gap floor — the floor's test lives
+with the r15 vacuum test it extends)."""
 
 from __future__ import annotations
 
@@ -11,47 +10,6 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
-
-
-def test_preflight_reads_recorded_r15_host_as_clean():
-    """The r15 gate slept 6 minutes and stamped degraded_at_start on a
-    host whose in-run stable-median then read 1.08 parity — the unpinned
-    multithreaded matmul was measuring BLAS thread scheduling. Feeding
-    the RECORDED r15 attempt values through the fixed gate: the old
-    baseline shape yields no reference (pinned probe never compares
-    against an unpinned one), and the recorded loads (3.64, 0.46, 0.09,
-    0.05 — all under the 4.0 gate) read the host as clean on the first
-    attempt, zero sleeps."""
-    import bench
-
-    # The committed r15 baseline's host_calib (old shape, no 1t key).
-    assert bench.baseline_ref_numpy(
-        {
-            "numpy_matmul_2048x2048x2_sec": 1.671,
-            "numpy_matmul_end_sec": 3.5,
-            "spark_range_200m_agg_sec": 0.329,
-            "spark_range_end_sec": 0.359,
-        }
-    ) is None
-    sleeps: list[float] = []
-    r15_loads = iter([3.64, 0.46, 0.09, 0.05])
-    r = bench.preflight_gate(
-        None,
-        probe_fn=lambda: 6.051,  # the r15 probe that read "5.3x degraded"
-        load_fn=lambda: next(r15_loads),
-        sleep_fn=sleeps.append,
-    )
-    assert r["decision"] == "clean_no_reference"
-    assert sleeps == [] and r["slept_sec"] == 0
-
-
-def test_numpy_probe_is_pinned_subprocess():
-    """The probe itself: runs in a subprocess with BLAS pinned to one
-    thread and returns the matmul-only duration (startup excluded)."""
-    import bench
-
-    t = bench._numpy_probe()
-    assert 0.05 < t < 60.0
 
 
 def test_canon_survives_literal_hash_and_question_mark():

@@ -4,8 +4,9 @@ held 170 — this check makes that class of drift impossible to ship).
 
 Usage: python tools/doc_check.py   (exit 1 on any mismatch)
 
-Rules: every literal of the form "<N> named queries" or "all <N> queries"
-in README.md must equal len(QUERIES); ORACLES must cover QUERIES; every
+Rules: every literal of the form "<N> named queries", "all <N> queries"
+or "<N>/<N> oracle" in README.md must equal len(QUERIES) (both numbers of
+the last form); ORACLES must cover QUERIES; every
 "<N> pytest cases" literal must equal the live collected test count
 (VERDICT r14 nit: the query gate let the test count drift two rounds).
 """
@@ -42,14 +43,15 @@ def main() -> int:
     bad = 0
     text = open("README.md", encoding="utf-8").read()
     for m in re.finditer(
-        r"(\d+)\s+named queries|all\s+(\d+)\s+queries|ALL\s+(\d+)\s+with",
+        r"(\d+)\s+named queries|all\s+(\d+)\s+queries|ALL\s+(\d+)\s+with"
+        r"|(\d+)/(\d+)\s+oracle",
         text,
     ):
-        claimed = int(next(g for g in m.groups() if g))
-        if claimed != n:
-            line = text[: m.start()].count("\n") + 1
-            print(f"DRIFT README.md:{line}: says {claimed}, registry has {n}")
-            bad += 1
+        for claimed in {int(g) for g in m.groups() if g}:
+            if claimed != n:
+                line = text[: m.start()].count("\n") + 1
+                print(f"DRIFT README.md:{line}: says {claimed}, registry has {n}")
+                bad += 1
     missing = [q for q in QUERIES if q not in ORACLES]
     if missing:
         print(f"DRIFT: {len(missing)} queries lack oracles: {missing[:5]}")
